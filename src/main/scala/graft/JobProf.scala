@@ -33,6 +33,7 @@ object JobProf {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val baselineConf = spark.conf.getAll
 
     val jobs = mutable.LinkedHashMap[Int, JobStat]()
     val stageToJob = mutable.HashMap[Int, Int]()
@@ -73,7 +74,7 @@ object JobProf {
 
     var lastWall = 0L
     for (rep <- 1 to reps) {
-      CacheRegistry.releaseAll(spark)
+      CacheRegistry.endQuery(spark, baselineConf)
       if (rep == reps) { jobs.clear(); stageToJob.clear(); collecting = true }
       val t0 = System.nanoTime()
       fn(spark, sfDir).queryExecution.toRdd.count()
@@ -86,7 +87,7 @@ object JobProf {
       collecting = false
       System.err.println(s"[jobprof] rep $rep: ${lastWall / 1000.0}s")
     }
-    CacheRegistry.releaseAll(spark)
+    CacheRegistry.endQuery(spark, baselineConf)
 
     def mb(b: Long): String = f"${b / 1048576.0}%9.1f"
     println(f"%nquery=$qname sf=$sfDir wall=${lastWall / 1000.0}%.2fs jobs=${jobs.size}")

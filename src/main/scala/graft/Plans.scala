@@ -25,6 +25,7 @@ object Plans {
     // flags change join/exchange choices)
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    val baselineConf = spark.conf.getAll
     val sb = new StringBuilder
     sb.append(s"# Captured `.explain(\"formatted\")` plans ($sfDir)\n\n")
     sb.append("Generated by `graft.Plans`; audit narrative in SURVEY §3a/§4.\n")
@@ -65,7 +66,7 @@ object Plans {
         val plan = try fn(spark, sfDir).queryExecution.explainString(ExplainMode.fromString("formatted"))
           catch { case e: Throwable => s"<failed: ${e.getMessage}>" }
         sb.append(s"\n## $name\n\n```\n${cap(plan)}```\n")
-        CacheRegistry.releaseAll(spark)
+        CacheRegistry.endQuery(spark, baselineConf)
         val driverAssembled = !plan.contains("Scan parquet") && plan.contains("LocalTableScan")
         if (driverAssembled) {
           captured.clear()
@@ -83,7 +84,7 @@ object Plans {
               sb.append(f"\n#### ${durNs / 1e9}%.2fs\n\n```\n${cap(p, ExecCapBytes)}```\n")
             }
           }
-          CacheRegistry.releaseAll(spark)
+          CacheRegistry.endQuery(spark, baselineConf)
         }
       }
     }

@@ -28,13 +28,6 @@ object SweepProbe {
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val baselineConf = spark.conf.getAll
-    def resetConfs(): Unit = {
-      val cur = spark.conf.getAll
-      for ((k, v) <- baselineConf if !cur.get(k).contains(v))
-        try spark.conf.set(k, v) catch { case _: Throwable => () }
-      for (k <- cur.keySet -- baselineConf.keySet)
-        try spark.conf.unset(k) catch { case _: Throwable => () }
-    }
     def gcMs: Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
@@ -68,8 +61,7 @@ object SweepProbe {
       catch { case e: Throwable => System.err.println(s"[probe] $n FAILED: ${e.getMessage}") }
       finally watchdog.foreach(_.interrupt())
       val dt = (System.nanoTime() - t0) / 1e9
-      CacheRegistry.releaseAll(spark)
-      resetConfs()
+      CacheRegistry.endQuery(spark, baselineConf)
       val sc = spark.sparkContext
       val nJobs = sc.statusTracker.getJobIdsForGroup(null).length
       println(f"[probe] p$pass $n%-28s ${dt}%8.2fs  cumJobs=$nJobs thr=${Thread.activeCount}%4d heapMB=$heapMb%5d gcMs=$gcMs%6d")

@@ -13,17 +13,7 @@ object Verify {
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Conf isolation between queries (same rationale as Bench): a failed
-    // finally-restore inside one query must not leak tuned confs into the
-    // plans of every later query in the run.
     val baselineConf = spark.conf.getAll
-    def resetConfs(): Unit = {
-      val cur = spark.conf.getAll
-      for ((k, v) <- baselineConf if !cur.get(k).contains(v))
-        try spark.conf.set(k, v) catch { case _: Throwable => () }
-      for (k <- cur.keySet -- baselineConf.keySet)
-        try spark.conf.unset(k) catch { case _: Throwable => () }
-    }
     SparkEntry.queries.filter(q => only.isEmpty || only(q._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -31,8 +21,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       finally {
-        CacheRegistry.releaseAll(spark) // no cache carries across queries
-        resetConfs()                    // no conf drift either
+        CacheRegistry.endQuery(spark, baselineConf) // no cache, store or conf drift carries over
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

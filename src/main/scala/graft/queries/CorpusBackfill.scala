@@ -66,31 +66,13 @@ object CorpusBackfill {
       spark: SparkSession, dir: String): (DataFrame, BackfillDetail) = {
     import VectorQueries.{EmbedQEvery, K}
     import CorpusForget.FgtBuckets
-    val m = HashDedup.IncCalMod.toLong
-    def clsOf(c: Column): Column = pmod(c, lit(m))
-    val docs = TextQueries.dupCorpus(spark, dir)
-    val tok = graft.CacheRegistry.track(TextQueries.dupCorpusTok(spark, dir).persist())
-    val bandRows = graft.CacheRegistry.track(
-      HashDedup.mpBaseRows(HashDedup.mpSigFrom(tok))
-        .withColumn("cls", clsOf(col("doc_id"))).persist())
-    val ve = graft.CacheRegistry.track(
-      PipelineQueries.docEmbedVectorsFrom(docs)
-        .select(col("doc_id"), col("emb_arr"), col("norm_sq"))
-        .withColumn("cls", clsOf(col("doc_id"))).persist())
-    val queries = graft.CacheRegistry.track(
-      ve.filter(col("doc_id") % EmbedQEvery === 0 && col("cls") =!= 3L)
-        .select(col("doc_id").as("q_id"), col("emb_arr").as("q_emb"), col("norm_sq").as("q_norm"))
-        .persist())
-
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_corpbf_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
-    graft.Fs.rmTree(root)
-    val ixStore = root.resolve("index"); val vStore = root.resolve("vectors")
-    def landIx(r: DataFrame, gen: Int, nFiles: Int): Unit =
-      r.withColumn("gen", lit(gen)).repartition(nFiles)
-        .write.partitionBy("gen").mode("append").parquet(ixStore.toString)
-    val ixNight = bandRows.filter(col("cls") === 1L)
-      .select(col("doc_id"), col("band"), col("band_key"))
+    import BandIndex.clsOf
+    val fx = new BandIndex(spark, dir)
+    val ve = fx.ve
+    val queries = fx.queriesOutside(3L)
+    val root = graft.GenStore.open(spark, "corpus_backfill")
+    val ixStore = root.sub("index"); val vStore = root.sub("vectors")
+    val ixNight = fx.ofCls(_ === 1L)
     // vector store: bucket-partitioned (the №198 layout); night = cls 1
     def vRows(p: Column => Column): DataFrame =
       ve.filter(p(col("cls")) && !(col("doc_id") % EmbedQEvery === 0) && col("cls") =!= 3L)
@@ -98,27 +80,12 @@ object CorpusBackfill {
         .withColumn("bkt", pmod(col("doc_id"), lit(FgtBuckets)))
     def landV(r: DataFrame): Unit =
       r.repartition(col("bkt")).write.partitionBy("bkt").mode("append").parquet(vStore.toString)
-    landIx(bandRows.filter(col("cls") =!= 1L && col("cls") =!= 3L)
-      .select(col("doc_id"), col("band"), col("band_key")), 0, 4)
-    landIx(ixNight, 1, 2)
+    ixStore.land(fx.ofCls(c => c =!= 1L && c =!= 3L), 0, 4)
+    ixStore.land(ixNight, 1, 2)
     landV(vRows(_ =!= 1L)); landV(vRows(_ === 1L))
-    val probeKeys = bandRows.filter(col("cls") === 3L)
-      .select(col("doc_id"), col("band"), col("band_key"))
-
-    def filesByBucket(): Map[Long, Int] = {
-      val s = java.nio.file.Files.list(vStore)
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
-        .filter(p => java.nio.file.Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith("bkt="))
-        .map { p =>
-          val c = p.getFileName.toString.stripPrefix("bkt=").toLong
-          val l = java.nio.file.Files.list(p)
-          val n = try l.filter(f => f.getFileName.toString.endsWith(".parquet")).count().toInt
-          finally l.close()
-          c -> n
-        }.toMap
-      finally s.close()
-    }
+    val probeKeys = fx.ofCls(_ === 3L)
+    def filesByBucket(): Map[Long, Int] =
+      vStore.filesByGen().map { case (b, n) => b.stripPrefix("bkt=").toLong -> n }
     val out = scala.collection.mutable.ArrayBuffer.empty[
       (Long, Long, Long, Long, Long, Long, Long, Long, Long, Long, Long, Double)]
     val candPairs = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
@@ -134,15 +101,9 @@ object CorpusBackfill {
     // serve wall the r14 bench billed was proof work done four times.
     var scoredCache: Option[(DataFrame, Array[(Long, Long, Long, Double)])] = None
     def serve(stage: Int): Unit = {
-      val ixBack = spark.read.parquet(ixStore.toString)
-        .select(col("doc_id"), col("band"), col("band_key"))
-      val cand = probeKeys.as("a").join(ixBack.as("b"),
-          col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-            col("a.doc_id") =!= col("b.doc_id"))
-        .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-          greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b")).distinct()
-      val vBack = spark.read.parquet(vStore.toString)
-        .select(col("doc_id"), col("emb_arr"), col("norm_sq"))
+      val ixBack = ixStore.readBack(BandIndex.IdxCols: _*)
+      val cand = BandIndex.probe(probeKeys, ixBack)
+      val vBack = vStore.readBack(col("doc_id"), col("emb_arr"), col("norm_sq"))
       // candidate pairs: ONE execution per stage (guide §1.2 "don't
       // compute things twice") — the census's n_cand previously re-ran
       // the whole probe join under a count aggregate while candPairs
@@ -166,12 +127,7 @@ object CorpusBackfill {
           // membership dedup BEFORE the query join — the idempotence
           // hinge: storm copies are full-row duplicates, so the distinct
           // collapses them and the cos never sees multiplicity
-          val scored = vBack.distinct().join(broadcast(queries))
-            .select(col("q_id"), col("doc_id"),
-              round(
-                aggregate(zip_with(col("emb_arr"), col("q_emb"), (x, y) => x * y), lit(0L), (acc, p) => acc + p)
-                  .cast("double") /
-                  (sqrt(col("norm_sq").cast("double")) * sqrt(col("q_norm").cast("double"))), 6).as("cos"))
+          val scored = BandIndex.scored(vBack.distinct(), queries)
           val rows = VectorQueries.topKRanked(scored, "q_id", "cos", "doc_id", K)
             .collect().map(r => (r.getAs[Long]("q_id"),
               r.getAs[Number]("rank").longValue, r.getAs[Long]("doc_id"),
@@ -190,17 +146,18 @@ object CorpusBackfill {
       topk(stage) = served.map(t => (t._1, t._3)).toSet
     }
     serve(0)
-    landIx(ixNight, 1, 2)          // PARTIAL storm: text only
+    ixStore.land(ixNight, 1, 2)    // PARTIAL storm: text only
     serve(1)
     landV(vRows(_ === 1L))         // SYMMETRIC storm: vector too
     serve(2)
     // repairs, each store in its own safe form
-    val gen1 = spark.read.parquet(ixStore.resolve("gen=1").toString)
-      .select(col("doc_id"), col("band"), col("band_key")).persist()
-    val ixRepairRead = gen1.count()
-    landIx(gen1.distinct(), 11, 2)
-    gen1.unpersist()
-    graft.Fs.rmTree(ixStore.resolve("gen=1"))
+    val gen1 = ixStore.sub("gen=1").readBack(BandIndex.IdxCols: _*)
+    val ixRepairRead = graft.GenStore.withPersisted(gen1) {
+      val n = gen1.count()
+      ixStore.land(gen1.distinct(), 11, 2)
+      n
+    }
+    ixStore.drop(1)
     val nightBuckets = vRows(_ === 1L).select(col("bkt")).distinct()
       .collect().map(_.getLong(0)).toSet
     val before = filesByBucket().filter { case (b, _) => !nightBuckets(b) }

@@ -56,31 +56,15 @@ object CorpusNight {
       spark: SparkSession, dir: String): (DataFrame, NightDetail) = {
     import VectorQueries.{EmbedQEvery, K}
     val m = HashDedup.IncCalMod.toLong
-    def clsOf(c: Column): Column = pmod(c, lit(m))
-    val docs = TextQueries.dupCorpus(spark, dir)
-    val tok = graft.CacheRegistry.track(TextQueries.dupCorpusTok(spark, dir).persist())
-    val sh5 = TextQueries.shingleFrameOf(tok)
-    val bandRows = graft.CacheRegistry.track(HashDedup.mpBaseRows(HashDedup.mpSigFrom(tok))
-      .withColumn("cls", clsOf(col("doc_id"))).persist())
-    val ve = graft.CacheRegistry.track(
-      PipelineQueries.docEmbedVectorsFrom(docs)
-        .select(col("doc_id"), col("emb_arr"), col("norm_sq"))
-        .withColumn("cls", clsOf(col("doc_id"))).persist())
-    val queries = graft.CacheRegistry.track(
-      ve.filter(col("doc_id") % EmbedQEvery === 0 && col("cls") =!= 1L)
-        .select(col("doc_id").as("q_id"), col("emb_arr").as("q_emb"), col("norm_sq").as("q_norm"))
-        .persist())
-
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_night_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
-    graft.Fs.rmTree(root)
-    val ixStore = root.resolve("index"); val vStore = root.resolve("vectors")
-    def landIx(r: DataFrame, gen: Int, nFiles: Int): Unit =
-      r.withColumn("gen", lit(gen)).repartition(nFiles)
-        .write.partitionBy("gen").mode("append").parquet(ixStore.toString)
+    import BandIndex.clsOf
+    val fx = new BandIndex(spark, dir)
+    val ve = fx.ve
+    val queries = fx.queriesOutside(1L)
+    val root = graft.GenStore.open(spark, "corpus_night")
+    val ixStore = root.sub("index"); val vStore = root.sub("vectors")
     def landV(r: DataFrame, nFiles: Int): Unit =
       r.repartition(nFiles).write.mode("append").parquet(vStore.toString)
-    landIx(bandRows.filter(col("cls") =!= 1L).select(col("doc_id"), col("band"), col("band_key")), 0, 4)
+    ixStore.land(fx.ofCls(_ =!= 1L), 0, 4)
     landV(ve.filter(col("cls") =!= 1L && !(col("doc_id") % EmbedQEvery === 0))
       .select(col("doc_id"), col("emb_arr"), col("norm_sq")), 4)
 
@@ -88,14 +72,8 @@ object CorpusNight {
     val storeDocs = scala.collection.mutable.Map.empty[Int, Set[Long]]
     def serve(stage: Int, nDropped: Long): Unit = {
       val ixBack = spark.read.parquet(ixStore.toString)
-      val vBack = spark.read.parquet(vStore.toString)
-        .select(col("doc_id"), col("emb_arr"), col("norm_sq"))
-      val scored = vBack.join(broadcast(queries))
-        .select(col("q_id"), col("doc_id"),
-          round(
-            aggregate(zip_with(col("emb_arr"), col("q_emb"), (x, y) => x * y), lit(0L), (acc, p) => acc + p)
-              .cast("double") /
-              (sqrt(col("norm_sq").cast("double")) * sqrt(col("q_norm").cast("double"))), 6).as("cos"))
+      val vBack = vStore.readBack(col("doc_id"), col("emb_arr"), col("norm_sq"))
+      val scored = BandIndex.scored(vBack, queries)
       val census = ixBack.agg(count(lit(1)).as("n_index_rows"))
         .crossJoin(broadcast(vBack.agg(count(lit(1)).as("n_vecs"))))
       VectorQueries.topKRanked(scored, "q_id", "cos", "doc_id", K)
@@ -108,15 +86,8 @@ object CorpusNight {
     serve(0, 0L)
 
     // THE NIGHT: probe the index FILES, verify exactly, split the batch
-    val batchKeys = bandRows.filter(col("cls") === 1L)
-      .select(col("doc_id"), col("band"), col("band_key"))
-    val ixBack = spark.read.parquet(ixStore.toString)
-      .select(col("doc_id"), col("band"), col("band_key"))
-    val cand = batchKeys.as("a").join(ixBack.as("b"),
-        col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-          col("a.doc_id") =!= col("b.doc_id"))
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b")).distinct()
+    val batchKeys = fx.ofCls(_ === 1L)
+    val cand = BandIndex.probe(batchKeys, ixStore.readBack(BandIndex.IdxCols: _*))
     // the dedup DECISION is a landed artifact, not a transient frame: the
     // index append below writes to the path the decision's lineage READS,
     // and Spark invalidates path-dependent caches on write — a cached
@@ -125,15 +96,15 @@ object CorpusNight {
     // append empties; caught live at sf0.001). Both appends and the spec
     // consume the manifest FILES — №175's discipline applied to the
     // decision itself.
-    val dupStore = root.resolve("dups")
-    TextQueries.verifyPairsOf(sh5, cand)
+    val dupStore = root.path.resolve("dups")
+    fx.verified(cand)
       .select(when(clsOf(col("doc_a")) === 1L, col("doc_a")).otherwise(col("doc_b")).as("doc_id"))
       .distinct().coalesce(1).write.parquet(dupStore.toString)
     val dups = spark.read.parquet(dupStore.toString)
     val nDropped = dups.count()
     // survivors: distributed anti-join — the dup set is batch-bounded but
     // never becomes a driver-side literal list in the plan
-    landIx(batchKeys.join(dups, Seq("doc_id"), "left_anti"), 1, 2)
+    ixStore.land(batchKeys.join(dups, Seq("doc_id"), "left_anti"), 1, 2)
     landV(ve.filter(col("cls") === 1L).select(col("doc_id"), col("emb_arr"), col("norm_sq"))
       .join(dups, Seq("doc_id"), "left_anti"), 2)
     serve(1, nDropped)

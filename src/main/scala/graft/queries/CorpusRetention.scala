@@ -55,42 +55,24 @@ object CorpusRetention {
       spark: SparkSession, dir: String): (DataFrame, RetentionDetail) = {
     import VectorQueries.{EmbedQEvery, K}
     val m = HashDedup.IncCalMod.toLong
-    def clsOf(c: Column): Column = pmod(c, lit(m))
-    val docs = TextQueries.dupCorpus(spark, dir)
-    val tok = graft.CacheRegistry.track(TextQueries.dupCorpusTok(spark, dir).persist())
-    val sh5 = TextQueries.shingleFrameOf(tok)
-    val truthAll = graft.CacheRegistry.track(
-      TextQueries.dedupNgramJaccardFrom(tok).select(col("doc_a"), col("doc_b")).persist())
-    val bandRows = graft.CacheRegistry.track(
-      HashDedup.mpBaseRows(HashDedup.mpSigFrom(tok))
-        .withColumn("cls", clsOf(col("doc_id"))).persist())
-    val ve = graft.CacheRegistry.track(
-      PipelineQueries.docEmbedVectorsFrom(docs)
-        .select(col("doc_id"), col("emb_arr"), col("norm_sq"))
-        .withColumn("cls", clsOf(col("doc_id"))).persist())
+    import BandIndex.clsOf
+    val fx = new BandIndex(spark, dir)
     // night-3 probes the index; queries are held-out non-batch docs
-    val queries = graft.CacheRegistry.track(
-      ve.filter(col("doc_id") % EmbedQEvery === 0 && col("cls") =!= 3L)
-        .select(col("doc_id").as("q_id"), col("emb_arr").as("q_emb"), col("norm_sq").as("q_norm"))
-        .persist())
+    val queries = fx.queriesOutside(3L)
     val genOf: Column = when(clsOf(col("doc_id")) === 1L, 1)
       .when(clsOf(col("doc_id")) === 2L, 2).otherwise(0)
 
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_corpret_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
-    graft.Fs.rmTree(root)
-    val ixStore = root.resolve("index"); val vStore = root.resolve("vectors")
-    bandRows.filter(col("cls") =!= 3L)
-      .select(col("doc_id"), col("band"), col("band_key")).withColumn("gen", genOf)
+    val root = graft.GenStore.open(spark, "corpus_retention")
+    val ixStore = root.sub("index"); val vStore = root.sub("vectors")
+    fx.ofCls(_ =!= 3L).withColumn("gen", genOf)
       .repartition(col("gen"))
       .write.partitionBy("gen").mode("overwrite").parquet(ixStore.toString)
-    ve.filter(col("cls") =!= 3L && !(col("doc_id") % EmbedQEvery === 0))
+    fx.ve.filter(col("cls") =!= 3L && !(col("doc_id") % EmbedQEvery === 0))
       .select(col("doc_id"), col("emb_arr"), col("norm_sq")).withColumn("gen", genOf)
       .repartition(col("gen"))
       .write.partitionBy("gen").mode("overwrite").parquet(vStore.toString)
 
-    val night3Keys = bandRows.filter(col("cls") === 3L)
-      .select(col("doc_id"), col("band"), col("band_key"))
+    val night3Keys = fx.ofCls(_ === 3L)
     // text truth per stage: night-3 pairs whose partner is in the stage's
     // TEXT window (stage 1 shares stage 2's text window — that is the point)
     def partnerAt(stage: Int)(c: Column): Column = stage match {
@@ -98,16 +80,9 @@ object CorpusRetention {
       case 1 | 2 => clsOf(c).isin(1L, 2L)
       case 3 => clsOf(c) === 2L
     }
-    def truthAt(stage: Int): DataFrame = truthAll.filter(
+    def truthAt(stage: Int): DataFrame = fx.truthAll.filter(
       (clsOf(col("doc_a")) === 3L && partnerAt(stage)(col("doc_b"))) ||
         (clsOf(col("doc_b")) === 3L && partnerAt(stage)(col("doc_a"))))
-
-    def gensOf(p: java.nio.file.Path): Seq[String] = {
-      val s = java.nio.file.Files.list(p)
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
-        .filter(java.nio.file.Files.isDirectory(_)).map(_.getFileName.toString).toSeq.sorted
-      finally s.close()
-    }
     val out = scala.collection.mutable.ArrayBuffer.empty[
       (Long, Long, Long, Long, Long, Long, Long, Long, Long, Long, Double)]
     val hitPairs = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
@@ -117,25 +92,13 @@ object CorpusRetention {
     var full: Set[(Long, Long)] = Set.empty
     def serve(stage: Int): Unit = {
       // TEXT leg: probe the index files, verify, hit vs the window truth
-      val ixBack = spark.read.parquet(ixStore.toString)
-        .select(col("doc_id"), col("band"), col("band_key"))
-      val cand = night3Keys.as("a").join(ixBack.as("b"),
-          col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-            col("a.doc_id") =!= col("b.doc_id"))
-        .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-          greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b")).distinct()
+      val ixBack = ixStore.readBack(BandIndex.IdxCols: _*)
       val ts = truthAt(stage)
-      val hits = TextQueries.verifyPairsOf(sh5, cand).select(col("doc_a"), col("doc_b"))
+      val hits = fx.verified(BandIndex.probe(night3Keys, ixBack))
         .join(broadcast(ts), Seq("doc_a", "doc_b"))
       // VECTOR leg: serve the files
-      val vBack = spark.read.parquet(vStore.toString)
-        .select(col("doc_id"), col("emb_arr"), col("norm_sq"))
-      val scored = vBack.join(broadcast(queries))
-        .select(col("q_id"), col("doc_id"),
-          round(
-            aggregate(zip_with(col("emb_arr"), col("q_emb"), (x, y) => x * y), lit(0L), (acc, p) => acc + p)
-              .cast("double") /
-              (sqrt(col("norm_sq").cast("double")) * sqrt(col("q_norm").cast("double"))), 6).as("cos"))
+      val vBack = vStore.readBack(col("doc_id"), col("emb_arr"), col("norm_sq"))
+      val scored = BandIndex.scored(vBack, queries)
       val census = ixBack.agg(count(lit(1)).as("n_index_rows"))
         .crossJoin(broadcast(vBack.agg(count(lit(1)).as("n_vecs"))))
         .crossJoin(broadcast(hits.agg(count(lit(1)).as("n_hit"))))
@@ -156,13 +119,13 @@ object CorpusRetention {
       hitPairs(stage) = hits.select(col("doc_a"), col("doc_b")).collect()
         .map(h => (h.getLong(0), h.getLong(1))).toSet
       topk(stage) = pairs
-      ixGens(stage) = gensOf(ixStore); vecGens(stage) = gensOf(vStore)
+      ixGens(stage) = ixStore.generations(); vecGens(stage) = vStore.generations()
     }
     serve(0)
-    graft.Fs.rmTree(ixStore.resolve("gen=0")); serve(1)   // INCOHERENT
-    graft.Fs.rmTree(vStore.resolve("gen=0")); serve(2)
-    graft.Fs.rmTree(ixStore.resolve("gen=1"))
-    graft.Fs.rmTree(vStore.resolve("gen=1")); serve(3)
+    ixStore.drop(0); serve(1)   // INCOHERENT
+    vStore.drop(0); serve(2)
+    ixStore.drop(1)
+    vStore.drop(1); serve(3)
     import spark.implicits._
     val df = out.toSeq
       .toDF("stage", "n_index_rows", "n_vecs", "n_hit", "n_true_w",

@@ -4028,98 +4028,53 @@ object HashDedup {
 
   private[graft] def dedupIndexCalendarDetail(
       spark: SparkSession, dir: String): (DataFrame, IndexCalendarDetail) = {
-    val tok = graft.CacheRegistry.track(TextQueries.dupCorpusTok(spark, dir).persist())
-    val sh5 = TextQueries.shingleFrameOf(tok)
-    val truthAll = graft.CacheRegistry.track(
-      TextQueries.dedupNgramJaccardFrom(tok).select(col("doc_a"), col("doc_b")).persist())
-    // one signature pass over the WHOLE corpus; stage membership is a
-    // filter on doc class (signatures are per-doc — no cross-doc state)
-    val rows = graft.CacheRegistry.track(mpBaseRows(mpSigFrom(tok))
-      .withColumn("cls", pmod(col("doc_id"), lit(IncCalMod.toLong))).persist())
-    def ofCls(p: Column => Column): DataFrame =
-      rows.filter(p(col("cls"))).select(col("doc_id"), col("band"), col("band_key"))
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_dedupcal_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
-    graft.Fs.rmTree(store) // idempotent re-runs: appends must not double
-    def land(r: DataFrame, gen: Int, nFiles: Int): Unit =
-      r.withColumn("gen", lit(gen)).repartition(nFiles)
-        .write.partitionBy("gen").mode("append").parquet(store.toString)
-    def clsOf(c: Column): Column = pmod(c, lit(IncCalMod.toLong))
+    val fx = new BandIndex(spark, dir)
+    import BandIndex.{clsOf, ratio}
+    import fx.ofCls
+    val store = graft.GenStore.open(spark, "dedup_index_calendar")
     // classes indexed when night n probes: everything landed before n
     def indexedAt(n: Int)(c: Column): Column =
       !clsOf(c).isin((n to 3).map(i => Long.box(i.toLong)): _*)
-    def truthNight(n: Int): DataFrame = truthAll.filter(
+    def truthNight(n: Int): DataFrame = fx.truthAll.filter(
       (clsOf(col("doc_a")) === n && indexedAt(n)(col("doc_b"))) ||
         (clsOf(col("doc_b")) === n && indexedAt(n)(col("doc_a"))))
     val batchCls = Seq(1L, 2L, 3L).map(Long.box)
-    val truthAudit = truthAll.filter(
+    val truthAudit = fx.truthAll.filter(
       clsOf(col("doc_a")).isin(batchCls: _*) || clsOf(col("doc_b")).isin(batchCls: _*))
     val out = scala.collection.mutable.ArrayBuffer.empty[
       (Long, Long, Long, Long, Long, Long)]
     val hitPairs = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
     val candPairs = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
-    def serve(stage: Int, keys: DataFrame, truthStage: DataFrame): Unit = {
-      // ONE materialization per serve (r16, guide §1.2/§6): the probe join
-      // (cand) used to execute 3-4× per stage and the τ=3/5 verify 2×
-      // (once under the census crossJoin's n_hit aggregate, once for the
-      // hitPairs collect) — persist the per-serve frames, collect hits
-      // ONCE, and read every census count off the one materialization.
-      // The store read-back stays per-serve (the drill's contract: the
-      // FILES are the store), but it feeds the census and the probe join
-      // from one cached scan. Values are unchanged — n_hit is the same
-      // count, now taken from the collected hit rows.
-      //
-      // UNPERSIST BEFORE RETURNING, not at query end: the store's files
-      // MUTATE between serves, and a live cache entry for this serve's
-      // read-back would be plan-matched by CacheManager into the NEXT
-      // serve's identical read — a stale file listing (measured at
-      // sf0.01: FILE_NOT_EXIST after a generation drop, and frozen
-      // n_rows censuses).
-      val back = spark.read.parquet(store.toString)
-        .select(col("doc_id"), col("band"), col("band_key")).persist()
-      val cand = keys.as("a").join(back.as("b"),
-          col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-            col("a.doc_id") =!= col("b.doc_id"))
-        .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-          greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b")).distinct().persist()
-      try {
-        val verified = TextQueries.verifyPairsOf(sh5, cand).select(col("doc_a"), col("doc_b"))
+    // ONE materialization per serve (r16, guide §1.2/§6): hits collected
+    // once, every census count read off the same cached read-back and
+    // candidates; the read-back stays per-serve (the FILES are the store)
+    def serve(stage: Int, keys: DataFrame, truthStage: DataFrame): Unit =
+      fx.serve(store, keys, BandIndex.IdxCols: _*) { (back, cand, verified) =>
         val hitArr = verified.join(broadcast(truthStage), Seq("doc_a", "doc_b")).collect()
-        val r = cand.agg(count(lit(1)).as("n_candidates"))
-          .crossJoin(broadcast(back.agg(count(lit(1)).as("n_index_rows"))))
-          .crossJoin(broadcast(keys.agg(count(lit(1)).as("n_lookups"))))
-          .crossJoin(broadcast(truthStage.agg(count(lit(1)).as("n_true"))))
+        val r = BandIndex.census(cand, back, keys, truthStage, count(lit(1)).as("n_index_rows"))
           .collect()(0)
         out += ((stage.toLong, r.getAs[Long]("n_index_rows"), r.getAs[Long]("n_lookups"),
           r.getAs[Long]("n_candidates"), r.getAs[Long]("n_true"), hitArr.length.toLong))
         hitPairs(stage) = hitArr.map(h => (h.getLong(0), h.getLong(1))).toSet
         if (stage == 3 || stage == 4)
           candPairs(stage) = cand.collect().map(c => (c.getLong(0), c.getLong(1))).toSet
-      } finally { cand.unpersist(); back.unpersist() }
-    }
-    land(ofCls(c => !c.isin(batchCls: _*)), 0, 4)
-    serve(1, ofCls(_ === 1L), truthNight(1)); land(ofCls(_ === 1L), 1, 2)
-    serve(2, ofCls(_ === 2L), truthNight(2)); land(ofCls(_ === 2L), 2, 2)
+      }
+    store.land(ofCls(c => !c.isin(batchCls: _*)), 0, 4)
+    serve(1, ofCls(_ === 1L), truthNight(1)); store.land(ofCls(_ === 1L), 1, 2)
+    serve(2, ofCls(_ === 2L), truthNight(2)); store.land(ofCls(_ === 2L), 2, 2)
     // E3 add wave: the compacted generation, derived from the cached rows
-    land(ofCls(c => !(c === 3L)), 9, 2)
+    store.land(ofCls(c => !(c === 3L)), 9, 2)
     serve(3, ofCls(_ === 3L), truthNight(3))
-    Seq(0, 1, 2).foreach(g => graft.Fs.rmTree(store.resolve(s"gen=$g")))
-    serve(4, ofCls(_ === 3L), truthNight(3)); land(ofCls(_ === 3L), 3, 2)
+    Seq(0, 1, 2).foreach(store.drop)
+    serve(4, ofCls(_ === 3L), truthNight(3)); store.land(ofCls(_ === 3L), 3, 2)
     serve(5, ofCls(c => c.isin(batchCls: _*)), truthAudit)
-    val gens = java.nio.file.Files.list(store)
-    val genNames = try {
-      scala.jdk.CollectionConverters.IteratorHasAsScala(gens.iterator()).asScala
-        .filter(java.nio.file.Files.isDirectory(_)).map(_.getFileName.toString).toSeq
-    } finally gens.close()
     import spark.implicits._
     val df = out.toSeq
       .toDF("stage", "n_index_rows", "n_lookups", "n_candidates", "n_true", "n_hit")
-      .select(col("stage"), col("n_index_rows"), col("n_lookups"),
-        col("n_candidates"), col("n_true"), col("n_hit"),
-        round(col("n_hit").cast("double") / greatest(col("n_candidates"), lit(1L)) + 1e-9, 6).as("prec"),
-        round(col("n_hit").cast("double") / greatest(col("n_true"), lit(1L)) + 1e-9, 6).as("rec"))
+      .withColumn("prec", ratio("n_hit", "n_candidates"))
+      .withColumn("rec", ratio("n_hit", "n_true"))
       .orderBy(col("stage"))
-    (df, IndexCalendarDetail(hitPairs.toMap, candPairs.toMap, genNames.toSeq.sorted))
+    (df, IndexCalendarDetail(hitPairs.toMap, candPairs.toMap, store.generations()))
   }
   val IncCalMod = 7
 
@@ -4157,28 +4112,17 @@ object HashDedup {
 
   private[graft] def dedupIndexRetentionDetail(
       spark: SparkSession, dir: String): (DataFrame, IndexRetentionDetail) = {
-    val tok = graft.CacheRegistry.track(TextQueries.dupCorpusTok(spark, dir).persist())
-    val sh5 = TextQueries.shingleFrameOf(tok)
-    val truthAll = graft.CacheRegistry.track(
-      TextQueries.dedupNgramJaccardFrom(tok).select(col("doc_a"), col("doc_b")).persist())
-    val rows = graft.CacheRegistry.track(mpBaseRows(mpSigFrom(tok))
-      .withColumn("cls", pmod(col("doc_id"), lit(IncCalMod.toLong))).persist())
-    def ofCls(p: Column => Column): DataFrame =
-      rows.filter(p(col("cls"))).select(col("doc_id"), col("band"), col("band_key"))
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_dedupret_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
-    graft.Fs.rmTree(store)
-    def land(r: DataFrame, gen: Int, nFiles: Int): Unit =
-      r.withColumn("gen", lit(gen)).repartition(nFiles)
-        .write.partitionBy("gen").mode("append").parquet(store.toString)
-    land(ofCls(c => !c.isin(1L, 2L, 3L)), 0, 4)
-    land(ofCls(_ === 1L), 1, 2)
-    land(ofCls(_ === 2L), 2, 2)
-    def clsOf(c: Column): Column = pmod(c, lit(IncCalMod.toLong))
+    val fx = new BandIndex(spark, dir)
+    import BandIndex.{clsOf, ratio}
+    import fx.ofCls
+    val store = graft.GenStore.open(spark, "dedup_index_retention")
+    store.land(ofCls(c => !c.isin(1L, 2L, 3L)), 0, 4)
+    store.land(ofCls(_ === 1L), 1, 2)
+    store.land(ofCls(_ === 2L), 2, 2)
     val night3Keys = ofCls(_ === 3L)
     // night-3 pairs with the partner anywhere older — what a full index
     // could find; per-window truth restricts the partner to the window
-    def truthWith(partner: Column => Column): DataFrame = truthAll.filter(
+    def truthWith(partner: Column => Column): DataFrame = fx.truthAll.filter(
       (clsOf(col("doc_a")) === 3L && partner(col("doc_b"))) ||
         (clsOf(col("doc_b")) === 3L && partner(col("doc_a"))))
     val truthFull = truthWith(c => clsOf(c) =!= 3L)
@@ -4189,52 +4133,29 @@ object HashDedup {
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long, Long, Long)]
     val hitPairs = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
     val gensAfter = scala.collection.mutable.Map.empty[Int, Seq[String]]
-    def gensOnDisk(): Seq[String] = {
-      val s = java.nio.file.Files.list(store)
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
-        .filter(java.nio.file.Files.isDirectory(_)).map(_.getFileName.toString).toSeq.sorted
-      finally s.close()
-    }
-    def serve(window: Int): Unit = {
-      // ONE materialization per serve, unpersisted before returning (r16,
-      // guide §1.2/§6) — see dedupIndexCalendar's serve for the rationale
-      // and the stale-cache hazard; values unchanged.
-      val back = spark.read.parquet(store.toString)
-        .select(col("doc_id"), col("band"), col("band_key")).persist()
-      val cand = night3Keys.as("a").join(back.as("b"),
-          col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-            col("a.doc_id") =!= col("b.doc_id"))
-        .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-          greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b")).distinct().persist()
-      try {
-        val verified = TextQueries.verifyPairsOf(sh5, cand).select(col("doc_a"), col("doc_b"))
+    def serve(window: Int): Unit =
+      fx.serve(store, night3Keys, BandIndex.IdxCols: _*) { (back, cand, verified) =>
         val tw = truthWith(windowPartners(window))
         val hitArr = verified.join(broadcast(tw), Seq("doc_a", "doc_b"))
           .select(col("doc_a"), col("doc_b")).collect()
-        val r = cand.agg(count(lit(1)).as("n_candidates"))
-          .crossJoin(broadcast(back.agg(count(lit(1)).as("n_index_rows"))))
-          .crossJoin(broadcast(night3Keys.agg(count(lit(1)).as("n_lookups"))))
-          .crossJoin(broadcast(tw.agg(count(lit(1)).as("n_true_window"))))
+        val r = BandIndex.census(cand, back, night3Keys, tw, count(lit(1)).as("n_index_rows"))
           .crossJoin(broadcast(truthFull.agg(count(lit(1)).as("n_true_all"))))
           .collect()(0)
         out += ((window.toLong, r.getAs[Long]("n_index_rows"), r.getAs[Long]("n_lookups"),
-          r.getAs[Long]("n_candidates"), r.getAs[Long]("n_true_window"),
+          r.getAs[Long]("n_candidates"), r.getAs[Long]("n_true"),
           r.getAs[Long]("n_true_all"), hitArr.length.toLong))
         hitPairs(window) = hitArr.map(h => (h.getLong(0), h.getLong(1))).toSet
-        gensAfter(window) = gensOnDisk()
-      } finally { cand.unpersist(); back.unpersist() }
-    }
+        gensAfter(window) = store.generations()
+      }
     serve(3)
-    graft.Fs.rmTree(store.resolve("gen=0")); serve(2)
-    graft.Fs.rmTree(store.resolve("gen=1")); serve(1)
+    store.drop(0); serve(2)
+    store.drop(1); serve(1)
     import spark.implicits._
     val df = out.toSeq
       .toDF("win", "n_index_rows", "n_lookups", "n_candidates",
         "n_true_window", "n_true_all", "n_hit")
-      .select(col("win"), col("n_index_rows"), col("n_lookups"),
-        col("n_candidates"), col("n_true_window"), col("n_true_all"), col("n_hit"),
-        round(col("n_hit").cast("double") / greatest(col("n_true_window"), lit(1L)) + 1e-9, 6).as("rec"),
-        round(col("n_hit").cast("double") / greatest(col("n_true_all"), lit(1L)) + 1e-9, 6).as("coverage"))
+      .withColumn("rec", ratio("n_hit", "n_true_window"))
+      .withColumn("coverage", ratio("n_hit", "n_true_all"))
       .orderBy(col("win"))
     (df, IndexRetentionDetail(hitPairs.toMap, gensAfter.toMap))
   }
@@ -4321,81 +4242,49 @@ object HashDedup {
 
   private[graft] def dedupIndexBackfillDetail(
       spark: SparkSession, dir: String): (DataFrame, IndexBackfillDetail) = {
-    val tok = graft.CacheRegistry.track(TextQueries.dupCorpusTok(spark, dir).persist())
-    val sh5 = TextQueries.shingleFrameOf(tok)
-    val truthAll = graft.CacheRegistry.track(
-      TextQueries.dedupNgramJaccardFrom(tok).select(col("doc_a"), col("doc_b")).persist())
-    val rows = graft.CacheRegistry.track(mpBaseRows(mpSigFrom(tok))
-      .withColumn("cls", pmod(col("doc_id"), lit(IncCalMod.toLong))).persist())
-    def ofCls(p: Column => Column): DataFrame =
-      rows.filter(p(col("cls"))).select(col("doc_id"), col("band"), col("band_key"))
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_dedupbf_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
-    graft.Fs.rmTree(store)
-    def land(r: DataFrame, gen: Int, nFiles: Int): Unit =
-      r.withColumn("gen", lit(gen)).repartition(nFiles)
-        .write.partitionBy("gen").mode("append").parquet(store.toString)
-    land(ofCls(c => !c.isin(1L, 2L, 3L)), 0, 4)
-    land(ofCls(_ === 1L), 1, 2)
-    land(ofCls(_ === 2L), 2, 2)
-    def clsOf(c: Column): Column = pmod(c, lit(IncCalMod.toLong))
+    val fx = new BandIndex(spark, dir)
+    import BandIndex.{clsOf, ratio}
+    import fx.ofCls
+    val store = graft.GenStore.open(spark, "dedup_index_backfill")
+    store.land(ofCls(c => !c.isin(1L, 2L, 3L)), 0, 4)
+    store.land(ofCls(_ === 1L), 1, 2)
+    store.land(ofCls(_ === 2L), 2, 2)
     val night3Keys = ofCls(_ === 3L)
-    val truth3 = truthAll.filter(
+    val truth3 = fx.truthAll.filter(
       (clsOf(col("doc_a")) === 3L && clsOf(col("doc_b")) =!= 3L) ||
         (clsOf(col("doc_b")) === 3L && clsOf(col("doc_a")) =!= 3L))
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long, Long, Long)]
     val candPairs = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
-    def serve(stage: Int): Unit = {
-      // ONE materialization per serve, unpersisted before returning (r16,
-      // guide §1.2/§6) — see dedupIndexCalendar's serve for the rationale
-      // and the stale-cache hazard; values unchanged.
-      val back = spark.read.parquet(store.toString)
-        .select(col("doc_id"), col("band"), col("band_key")).persist()
-      val cand = night3Keys.as("a").join(back.as("b"),
-          col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-            col("a.doc_id") =!= col("b.doc_id"))
-        .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-          greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b")).distinct().persist()
-      try {
-        val verified = TextQueries.verifyPairsOf(sh5, cand).select(col("doc_a"), col("doc_b"))
+    def serve(stage: Int): Unit =
+      fx.serve(store, night3Keys, BandIndex.IdxCols: _*) { (back, cand, verified) =>
         val nHit = verified.join(broadcast(truth3), Seq("doc_a", "doc_b")).count()
-        val r = cand.agg(count(lit(1)).as("n_candidates"))
-          .crossJoin(broadcast(back.agg(count(lit(1)).as("n_rows"),
-            countDistinct(col("doc_id"), col("band"), col("band_key")).as("n_distinct"))))
-          .crossJoin(broadcast(night3Keys.agg(count(lit(1)).as("n_lookups"))))
-          .crossJoin(broadcast(truth3.agg(count(lit(1)).as("n_true"))))
-          .collect()(0)
+        val r = BandIndex.census(cand, back, night3Keys, truth3, count(lit(1)).as("n_rows"),
+          countDistinct(col("doc_id"), col("band"), col("band_key")).as("n_distinct")).collect()(0)
         out += ((stage.toLong, r.getAs[Long]("n_rows"), r.getAs[Long]("n_distinct"),
           r.getAs[Long]("n_lookups"), r.getAs[Long]("n_candidates"),
           r.getAs[Long]("n_true"), nHit))
         candPairs(stage) = cand.collect().map(c => (c.getLong(0), c.getLong(1))).toSet
-      } finally { cand.unpersist(); back.unpersist() }
-    }
+      }
     serve(0)
     // the retry storm: night 2 lands AGAIN into the same generation
-    land(ofCls(_ === 2L), 2, 2)
+    store.land(ofCls(_ === 2L), 2, 2)
     serve(1)
     // bounded repair: distinct-rewrite of the affected generation only
-    val gen2 = spark.read.parquet(store.resolve("gen=2").toString)
-      .select(col("doc_id"), col("band"), col("band_key")).persist()
-    val repairRead = gen2.count()
-    land(gen2.distinct(), 12, 2)
-    gen2.unpersist()
-    graft.Fs.rmTree(store.resolve("gen=2"))
+    val gen2 = store.sub("gen=2").readBack(BandIndex.IdxCols: _*)
+    val repairRead = graft.GenStore.withPersisted(gen2) {
+      val n = gen2.count()
+      store.land(gen2.distinct(), 12, 2)
+      n
+    }
+    store.drop(2)
     serve(2)
-    val gensList = java.nio.file.Files.list(store)
-    val gens = try scala.jdk.CollectionConverters.IteratorHasAsScala(gensList.iterator()).asScala
-      .filter(java.nio.file.Files.isDirectory(_)).map(_.getFileName.toString).toSeq.sorted
-    finally gensList.close()
     import spark.implicits._
     val df = out.toSeq
       .toDF("stage", "n_rows", "n_distinct", "n_lookups", "n_candidates", "n_true", "n_hit")
-      .select(col("stage"), col("n_rows"), col("n_distinct"), col("n_lookups"),
-        col("n_candidates"), col("n_true"), col("n_hit"),
-        round(col("n_hit").cast("double") / greatest(col("n_candidates"), lit(1L)) + 1e-9, 6).as("prec"),
-        round(col("n_hit").cast("double") / greatest(col("n_true"), lit(1L)) + 1e-9, 6).as("rec"))
+      .withColumn("prec", ratio("n_hit", "n_candidates"))
+      .withColumn("rec", ratio("n_hit", "n_true"))
       .orderBy(col("stage"))
-    (df, IndexBackfillDetail(candPairs.toMap, gens, repairRead))
+    (df, IndexBackfillDetail(candPairs.toMap, store.generations(), repairRead))
   }
 
   val dedupIndexBackfillSql: String = {
@@ -4490,29 +4379,18 @@ object HashDedup {
 
   private[graft] def dedupIndexDeleteDetail(
       spark: SparkSession, dir: String): (DataFrame, IndexDeleteDetail) = {
-    val tok = graft.CacheRegistry.track(TextQueries.dupCorpusTok(spark, dir).persist())
-    val sh5 = TextQueries.shingleFrameOf(tok)
-    val truthAll = graft.CacheRegistry.track(
-      TextQueries.dedupNgramJaccardFrom(tok).select(col("doc_a"), col("doc_b")).persist())
-    val rows = graft.CacheRegistry.track(mpBaseRows(mpSigFrom(tok))
-      .withColumn("cls", pmod(col("doc_id"), lit(IncCalMod.toLong))).persist())
-    def clsOf(c: Column): Column = pmod(c, lit(IncCalMod.toLong))
+    val fx = new BandIndex(spark, dir)
+    import BandIndex.{clsOf, ratio}
+    import fx.ofCls
     // the manifest covers INDEXED docs only — a night-3 doc sharing the
     // residue is a probe key, not a deleted row
     def delOf(c: Column): Column =
       c % TxtDelMod === TxtDelRes && clsOf(c) =!= 3L
     val genOf: Column = when(col("cls") === 1L, 1).when(col("cls") === 2L, 2).otherwise(0)
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_dedupdel_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
-    graft.Fs.rmTree(store)
-    def land(r: DataFrame, gen: Int, nFiles: Int): Unit =
-      r.withColumn("gen", lit(gen)).repartition(nFiles)
-        .write.partitionBy("gen").mode("append").parquet(store.toString)
-    def ofCls(p: Column => Column): DataFrame =
-      rows.filter(p(col("cls"))).select(col("doc_id"), col("band"), col("band_key"))
-    land(ofCls(c => !c.isin(1L, 2L, 3L)), 0, 4)
-    land(ofCls(_ === 1L), 1, 2)
-    land(ofCls(_ === 2L), 2, 2)
+    val store = graft.GenStore.open(spark, "dedup_index_delete")
+    store.land(ofCls(c => !c.isin(1L, 2L, 3L)), 0, 4)
+    store.land(ofCls(_ === 1L), 1, 2)
+    store.land(ofCls(_ === 2L), 2, 2)
     val night3Keys = ofCls(_ === 3L)
     // partner-visibility per stage, a pure function of doc_id — the same
     // predicate gates the truth frame here and the index states in the oracle
@@ -4522,47 +4400,31 @@ object HashDedup {
       case 2 => clsOf(c) =!= 3L && !delOf(c)
       case 3 => !delOf(c)
     }
-    def truthAt(stage: Int): DataFrame = truthAll.filter(
+    def truthAt(stage: Int): DataFrame = fx.truthAll.filter(
       (clsOf(col("doc_a")) === 3L && visAt(stage)(col("doc_b"))) ||
         (clsOf(col("doc_b")) === 3L && visAt(stage)(col("doc_a"))))
     val out = scala.collection.mutable.ArrayBuffer.empty[
       (Long, Long, Long, Long, Long, Long, Long)]
     val hitPairs = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
     val delByGen = scala.collection.mutable.Map.empty[Int, Map[Int, Long]]
-    def serve(stage: Int): Unit = {
-      // ONE materialization per serve, unpersisted before returning (r16,
-      // guide §1.2/§6) — see dedupIndexCalendar's serve for the rationale
-      // and the stale-cache hazard; values unchanged.
-      val back = spark.read.parquet(store.toString)
-        .select(col("doc_id"), col("band"), col("band_key"), col("gen").cast("int").as("gen"))
-        .persist()
-      val cand = night3Keys.as("a").join(back.as("b"),
-          col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-            col("a.doc_id") =!= col("b.doc_id"))
-        .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-          greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b")).distinct().persist()
-      try {
-        val verified = TextQueries.verifyPairsOf(sh5, cand).select(col("doc_a"), col("doc_b"))
-        val ts = truthAt(stage)
-        val hitArr = verified.join(broadcast(ts), Seq("doc_a", "doc_b")).collect()
-        val r = cand.agg(count(lit(1)).as("n_candidates"))
-          .crossJoin(broadcast(back.agg(count(lit(1)).as("n_index_rows"),
-            sum(when(delOf(col("doc_id")), 1L).otherwise(0L)).as("n_del_visible"))))
-          .crossJoin(broadcast(night3Keys.agg(count(lit(1)).as("n_lookups"))))
-          .crossJoin(broadcast(ts.agg(count(lit(1)).as("n_true"))))
-          .collect()(0)
-        out += ((stage.toLong, r.getAs[Long]("n_index_rows"), r.getAs[Long]("n_del_visible"),
-          r.getAs[Long]("n_lookups"), r.getAs[Long]("n_candidates"),
-          r.getAs[Long]("n_true"), hitArr.length.toLong))
-        hitPairs(stage) = hitArr.map(h => (h.getLong(0), h.getLong(1))).toSet
-        delByGen(stage) = back.filter(delOf(col("doc_id"))).groupBy(col("gen")).count()
-          .collect().map(g => g.getInt(0) -> g.getLong(1)).toMap
-      } finally { cand.unpersist(); back.unpersist() }
-    }
+    def serve(stage: Int): Unit =
+      fx.serve(store, night3Keys, BandIndex.IdxCols :+ col("gen").cast("int").as("gen"): _*) {
+        (back, cand, verified) =>
+          val ts = truthAt(stage)
+          val hitArr = verified.join(broadcast(ts), Seq("doc_a", "doc_b")).collect()
+          val r = BandIndex.census(cand, back, night3Keys, ts, count(lit(1)).as("n_index_rows"),
+            sum(when(delOf(col("doc_id")), 1L).otherwise(0L)).as("n_del_visible")).collect()(0)
+          out += ((stage.toLong, r.getAs[Long]("n_index_rows"), r.getAs[Long]("n_del_visible"),
+            r.getAs[Long]("n_lookups"), r.getAs[Long]("n_candidates"),
+            r.getAs[Long]("n_true"), hitArr.length.toLong))
+          hitPairs(stage) = hitArr.map(h => (h.getLong(0), h.getLong(1))).toSet
+          delByGen(stage) = back.filter(delOf(col("doc_id"))).groupBy(col("gen")).count()
+            .collect().map(g => g.getInt(0) -> g.getLong(1)).toMap
+      }
     serve(0)
     var rewritten = 0L
     def wave(gens: Seq[Int]): Unit = {
-      val content = rows
+      val content = fx.rows
         .filter(col("cls") =!= 3L && !delOf(col("doc_id")))
         .withColumn("gen", genOf).filter(col("gen").isin(gens.map(Int.box): _*))
         .select(col("doc_id"), col("band"), col("band_key"), col("gen"))
@@ -4576,27 +4438,20 @@ object HashDedup {
       // gen dirs explicitly (CorpusForget's surviving-bucket cleanup).
       val surviving = content.select(col("gen")).distinct()
         .collect().map(_.getInt(0)).toSet
-      gens.filterNot(surviving).foreach(g =>
-        graft.Fs.rmTree(store.resolve(s"gen=$g")))
+      gens.filterNot(surviving).foreach(store.drop)
     }
     wave(Seq(0, 2)); serve(1)
     wave(Seq(1)); serve(2)
-    land(ofCls(_ === 3L), 3, 2)
+    store.land(ofCls(_ === 3L), 3, 2)
     serve(3)
-    val gensList = java.nio.file.Files.list(store)
-    val gens = try scala.jdk.CollectionConverters.IteratorHasAsScala(gensList.iterator()).asScala
-      .filter(java.nio.file.Files.isDirectory(_)).map(_.getFileName.toString).toSeq.sorted
-    finally gensList.close()
     import spark.implicits._
     val df = out.toSeq
       .toDF("stage", "n_index_rows", "n_del_visible", "n_lookups",
         "n_candidates", "n_true", "n_hit")
-      .select(col("stage"), col("n_index_rows"), col("n_del_visible"), col("n_lookups"),
-        col("n_candidates"), col("n_true"), col("n_hit"),
-        round(col("n_hit").cast("double") / greatest(col("n_candidates"), lit(1L)) + 1e-9, 6).as("prec"),
-        round(col("n_hit").cast("double") / greatest(col("n_true"), lit(1L)) + 1e-9, 6).as("rec"))
+      .withColumn("prec", ratio("n_hit", "n_candidates"))
+      .withColumn("rec", ratio("n_hit", "n_true"))
       .orderBy(col("stage"))
-    (df, IndexDeleteDetail(hitPairs.toMap, delByGen.toMap, gens, rewritten))
+    (df, IndexDeleteDetail(hitPairs.toMap, delByGen.toMap, store.generations(), rewritten))
   }
 
   val dedupIndexDeleteSql: String = {
@@ -4700,110 +4555,61 @@ object HashDedup {
   private[graft] def dedupIndexCompactDetail(
       spark: SparkSession, dir: String): (DataFrame, IndexCompactDetail) = {
     val m = IncCalMod.toLong
-    val tok = graft.CacheRegistry.track(TextQueries.dupCorpusTok(spark, dir).persist())
-    val sh5 = TextQueries.shingleFrameOf(tok)
-    val truthAll = graft.CacheRegistry.track(
-      TextQueries.dedupNgramJaccardFrom(tok).select(col("doc_a"), col("doc_b")).persist())
-    val rows = graft.CacheRegistry.track(mpBaseRows(mpSigFrom(tok))
-      .withColumn("cls", pmod(col("doc_id"), lit(m))).persist())
-    def clsOf(c: Column): Column = pmod(c, lit(m))
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_idxcmp_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
-    graft.Fs.rmTree(store)
-    def land(r: DataFrame, gen: Int, nFiles: Int): Unit =
-      r.withColumn("gen", lit(gen)).repartition(nFiles)
-        .write.partitionBy("gen").mode("append").parquet(store.toString)
-    def ofCls(p: Column => Column): DataFrame =
-      rows.filter(p(col("cls"))).select(col("doc_id"), col("band"), col("band_key"))
-    land(ofCls(c => !c.isin(1L, 2L, 3L)), 0, 4)
+    val fx = new BandIndex(spark, dir)
+    import BandIndex.{clsOf, ratio}
+    import fx.ofCls
+    val store = graft.GenStore.open(spark, "dedup_index_compact")
+    store.land(ofCls(c => !c.isin(1L, 2L, 3L)), 0, 4)
     // the small-files storm: each night landed as 3 separate appends
     // (micro-batch-shaped), 2 files each → 6 footers per generation
     (0L to 2L).foreach { slice =>
-      land(ofCls(_ === 1L).filter(expr(s"(doc_id DIV $m) % 3") === slice), 1, 2)
-      land(ofCls(_ === 2L).filter(expr(s"(doc_id DIV $m) % 3") === slice), 2, 2)
+      store.land(ofCls(_ === 1L).filter(expr(s"(doc_id DIV $m) % 3") === slice), 1, 2)
+      store.land(ofCls(_ === 2L).filter(expr(s"(doc_id DIV $m) % 3") === slice), 2, 2)
     }
     val night3Keys = ofCls(_ === 3L)
-    def filesByGen(): Map[String, Int] = {
-      val s = java.nio.file.Files.list(store)
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
-        .filter(p => java.nio.file.Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith("gen="))
-        .map { p =>
-          val l = java.nio.file.Files.list(p)
-          val n = try l.filter(f => f.getFileName.toString.endsWith(".parquet")).count().toInt
-          finally l.close()
-          p.getFileName.toString -> n
-        }.toMap
-      finally s.close()
-    }
-    def gen0Evidence(): Set[(String, Long)] = {
-      val l = java.nio.file.Files.list(store.resolve("gen=0"))
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(l.iterator()).asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(p => (p.getFileName.toString, java.nio.file.Files.size(p))).toSet
-      finally l.close()
-    }
     // truth gate: pairs with a night-3 member whose partner is visible —
     // constant through S0-S2 (compaction moves files, never visibility)
     def truthAt(stage: Int): DataFrame =
-      if (stage < 3) truthAll.filter(
+      if (stage < 3) fx.truthAll.filter(
         (clsOf(col("doc_a")) === 3L && clsOf(col("doc_b")) =!= 3L) ||
           (clsOf(col("doc_b")) === 3L && clsOf(col("doc_a")) =!= 3L))
-      else truthAll.filter(clsOf(col("doc_a")) === 3L || clsOf(col("doc_b")) === 3L)
+      else fx.truthAll.filter(clsOf(col("doc_a")) === 3L || clsOf(col("doc_b")) === 3L)
     val out = scala.collection.mutable.ArrayBuffer.empty[
       (Long, Long, Long, Long, Long, Long, Long)]
     val hitPairs = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
     val filesAt = scala.collection.mutable.Map.empty[Int, Map[String, Int]]
-    def serve(stage: Int): Unit = {
-      // ONE materialization per serve, unpersisted before returning (r16,
-      // guide §1.2/§6) — see dedupIndexCalendar's serve for the rationale
-      // and the stale-cache hazard; values unchanged.
-      val back = spark.read.parquet(store.toString)
-        .select(col("doc_id"), col("band"), col("band_key")).persist()
-      val cand = night3Keys.as("a").join(back.as("b"),
-          col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-            col("a.doc_id") =!= col("b.doc_id"))
-        .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-          greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b")).distinct().persist()
-      try {
-        val verified = TextQueries.verifyPairsOf(sh5, cand).select(col("doc_a"), col("doc_b"))
+    def serve(stage: Int): Unit =
+      fx.serve(store, night3Keys, BandIndex.IdxCols: _*) { (back, cand, verified) =>
         val ts = truthAt(stage)
         val hitArr = verified.join(broadcast(ts), Seq("doc_a", "doc_b")).collect()
-        val r = cand.agg(count(lit(1)).as("n_candidates"))
-          .crossJoin(broadcast(back.agg(count(lit(1)).as("n_rows"),
-            countDistinct(col("doc_id"), col("band"), col("band_key")).as("n_distinct"))))
-          .crossJoin(broadcast(night3Keys.agg(count(lit(1)).as("n_lookups"))))
-          .crossJoin(broadcast(ts.agg(count(lit(1)).as("n_true"))))
-          .collect()(0)
+        val r = BandIndex.census(cand, back, night3Keys, ts, count(lit(1)).as("n_rows"),
+          countDistinct(col("doc_id"), col("band"), col("band_key")).as("n_distinct")).collect()(0)
         out += ((stage.toLong, r.getAs[Long]("n_rows"), r.getAs[Long]("n_distinct"),
           r.getAs[Long]("n_lookups"), r.getAs[Long]("n_candidates"),
           r.getAs[Long]("n_true"), hitArr.length.toLong))
         hitPairs(stage) = hitArr.map(h => (h.getLong(0), h.getLong(1))).toSet
-        filesAt(stage) = filesByGen()
-      } finally { cand.unpersist(); back.unpersist() }
-    }
+        filesAt(stage) = store.filesByGen()
+      }
     serve(0)
-    val gen0Before = gen0Evidence()
+    val gen0Before = store.fileEvidence("gen=0")
     // WRITE-then-drop: the consolidated generation lands while its
     // sources still serve — content from the CACHED frame
     val consolidated = ofCls(c => c.isin(1L, 2L))
     val rewritten = consolidated.count()
-    land(consolidated, 10, 2)
+    store.land(consolidated, 10, 2)
     serve(1)
-    graft.Fs.rmTree(store.resolve("gen=1"))
-    graft.Fs.rmTree(store.resolve("gen=2"))
+    store.drop(1)
+    store.drop(2)
     serve(2)
-    val gen0After = gen0Evidence()
-    land(ofCls(_ === 3L), 3, 2)
+    val gen0After = store.fileEvidence("gen=0")
+    store.land(ofCls(_ === 3L), 3, 2)
     serve(3)
     import spark.implicits._
     val df = out.toSeq
       .toDF("stage", "n_rows", "n_distinct", "n_lookups",
         "n_candidates", "n_true", "n_hit")
-      .select(col("stage"), col("n_rows"), col("n_distinct"), col("n_lookups"),
-        col("n_candidates"), col("n_true"), col("n_hit"),
-        round(col("n_hit").cast("double") / greatest(col("n_candidates"), lit(1L)) + 1e-9, 6).as("prec"),
-        round(col("n_hit").cast("double") / greatest(col("n_true"), lit(1L)) + 1e-9, 6).as("rec"))
+      .withColumn("prec", ratio("n_hit", "n_candidates"))
+      .withColumn("rec", ratio("n_hit", "n_true"))
       .orderBy(col("stage"))
     (df, IndexCompactDetail(hitPairs.toMap, filesAt.toMap, gen0Before, gen0After, rewritten))
   }

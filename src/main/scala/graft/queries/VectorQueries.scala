@@ -2,8 +2,9 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.VectorOps._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.GenStore.withPersisted
 
 /** Similarity-search + embedding-dedup operators (SURVEY §2 №25-27).
   *
@@ -354,19 +355,33 @@ object VectorQueries {
     * one assignment across its probe widths — only this part varies). */
   private[graft] def ivfSearch(cells: DataFrame, centroids: DataFrame, queries: DataFrame,
                         probe: Int, k: Int): DataFrame = {
-    // probe: top-P centroids per query via the bounded-heap aggregate
-    val probes = queries.join(broadcast(centroids))
+    val scored = cells.join(broadcast(probeCells(queries, centroids, probe)), "cell")
+      .select(col("q_id"), col("vec_id"), cosine6(col("emb"), col("q_emb")).as("cos"))
+    topKRanked(scored, "q_id", "cos", "vec_id", k)
+      .orderBy(col("q_id"), col("rank"))
+  }
+
+  /** Probe: the top-`probe` centroids per query via the bounded-heap
+    * aggregate — (q_id, q_emb, cell), one row per probed cell. */
+  private[graft] def probeCells(queries: DataFrame, centroids: DataFrame,
+                                probe: Int = Probe): DataFrame =
+    queries.join(broadcast(centroids))
       .select(col("q_id"), col("q_emb"), col("c_id"), cosine6(col("q_emb"), col("c_emb")).as("qcos"))
       .groupBy(col("q_id"))
       .agg(first(col("q_emb")).as("q_emb"),
         graft.functions.TopKByScore.topK(col("qcos"), col("c_id"), probe).as("top"))
       .select(col("q_id"), col("q_emb"), explode(col("top.id")).as("cell"))
 
-    val scored = cells.join(broadcast(probes), "cell")
-      .select(col("q_id"), col("vec_id"), cosine6(col("emb"), col("q_emb")).as("cos"))
-    topKRanked(scored, "q_id", "cos", "vec_id", k)
-      .orderBy(col("q_id"), col("rank"))
-  }
+  /** One serve of a cell-partitioned store read-back (vec_id, emb, cell):
+    * the probed cells' distinct (q_id, vec_id, cos) — the dual copies of
+    * an in-overlap vector carry the same embedding, so the distinct is
+    * exact — ranked top-[[K]], each row carrying the read-back's `census`
+    * aggregates (census and search ride ONE job). */
+  private[graft] def servedTopK(back: DataFrame, probes: DataFrame, census: Column*): Array[Row] =
+    topKRanked(back.join(broadcast(probes), "cell")
+        .select(col("q_id"), col("vec_id"), cosine6(col("emb"), col("q_emb")).as("cos"))
+        .distinct(), "q_id", "cos", "vec_id", K)
+      .crossJoin(broadcast(back.agg(census.head, census.tail: _*))).collect()
 
   /** Neighbors per vector in the kNN graph. */
   val GraphK = 3
@@ -3014,8 +3029,7 @@ object VectorQueries {
       cellsOf(all, cent0).select(col("vec_id"), col("emb"), col("cell").as("cell0"))
         .join(cellsOf(all, cent1).select(col("vec_id"), col("cell").as("cell1")), "vec_id")
         .persist())
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_ivfrebinc_${dirKey(dir)}").toString
+    val store = graft.GenStore.open(spark, "knn_ivf_rebalance_inc").toString
     val emptied = partialRewrite(store,
       j.select(col("vec_id"), col("emb"), col("cell0").as("cell")),
       j.select(col("vec_id"), col("emb"), col("cell1").as("cell")))
@@ -3180,8 +3194,7 @@ object VectorQueries {
     val (g1, g2) = gainCells.splitAt((gainCells.length + 1) / 2)
     val (l1, l2) = lossCells.splitAt((lossCells.length + 1) / 2)
 
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_servereb_${dirKey(dir)}").toString
+    val store = graft.GenStore.open(spark, "knn_serve_rebalance").toString
     landStore(store, j.select(col("vec_id"), col("emb"), col("cell0").as("cell")))
 
     def gainWave(w: Array[Long]): Unit = if (w.nonEmpty) {
@@ -3205,14 +3218,8 @@ object VectorQueries {
         graft.Fs.rmTree(java.nio.file.Paths.get(store, s"cell=$c")))
     }
 
-    def probesOf(cent: DataFrame): DataFrame = queries.join(broadcast(cent))
-      .select(col("q_id"), col("q_emb"), col("c_id"), cosine6(col("q_emb"), col("c_emb")).as("qcos"))
-      .groupBy(col("q_id"))
-      .agg(first(col("q_emb")).as("q_emb"),
-        graft.functions.TopKByScore.topK(col("qcos"), col("c_id"), Probe).as("top"))
-      .select(col("q_id"), col("q_emb"), explode(col("top.id")).as("cell"))
-    val probes0 = graft.CacheRegistry.track(probesOf(cent0).persist())
-    val probes1 = graft.CacheRegistry.track(probesOf(cent1).persist())
+    val probes0 = graft.CacheRegistry.track(probeCells(queries, cent0).persist())
+    val probes1 = graft.CacheRegistry.track(probeCells(queries, cent1).persist())
 
     val captured = scala.collection.mutable.ArrayBuffer.empty[(Int, Array[(Long, Long)])]
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long, Long, Double)]
@@ -3223,16 +3230,8 @@ object VectorQueries {
       // inference) — normalize to the assignment's LONG
       val back = spark.read.parquet(store)
         .select(col("vec_id"), col("emb"), col("cell").cast("long").as("cell"))
-      // dedup the dual copies of in-overlap movers: both carry the same
-      // embedding, so distinct (q_id, vec_id, cos) is exact. Census and
-      // search ride ONE job (the census agg crossJoins the ranked rows).
-      val scored = back.join(broadcast(probes), "cell")
-        .select(col("q_id"), col("vec_id"), cosine6(col("emb"), col("q_emb")).as("cos"))
-        .distinct()
-      val census = back
-        .agg(count(lit(1)).as("n_rows"), countDistinct(col("vec_id")).as("n_vecs"))
-      topKRanked(scored, "q_id", "cos", "vec_id", K)
-        .crossJoin(broadcast(census)).collect().foreach(r =>
+      servedTopK(back, probes, count(lit(1)).as("n_rows"), countDistinct(col("vec_id")).as("n_vecs"))
+        .foreach(r =>
           out += ((stage.toLong, r.getAs[Long]("n_rows"), r.getAs[Long]("n_vecs"),
             r.getAs[Long]("q_id"), r.getAs[Number]("rank").longValue,
             r.getAs[Long]("vec_id"), r.getAs[Double]("cos"))))
@@ -3310,8 +3309,7 @@ object VectorQueries {
       .select(col("vec_id"), expr(rebalDriftSql("emb")).as("emb"))
     val a1 = night(1); val a2 = night(2); val a3 = night(3)
     val cent0 = refinedCentroids(spark, base, Centroids)
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_ivfcal_${dirKey(dir)}").toString
+    val store = graft.GenStore.open(spark, "knn_ivf_calendar").toString
 
     val snaps = scala.collection.mutable.ArrayBuffer.empty[(String, Map[String, (Long, Long)])]
     def snap(ev: String): Unit = if (captureCalendar) {
@@ -3440,26 +3438,14 @@ object VectorQueries {
       .select(col("vec_id"), expr(rebalDriftSql("emb")).as("emb"))
     val a1 = night(1); val a2 = night(2); val a3 = night(3)
     val cent0 = refinedCentroids(spark, base, Centroids)
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_servecal_${dirKey(dir)}").toString
+    val store = graft.GenStore.open(spark, "knn_serve_calendar").toString
 
-    def probesOf(cent: DataFrame): DataFrame = queries.join(broadcast(cent))
-      .select(col("q_id"), col("q_emb"), col("c_id"), cosine6(col("q_emb"), col("c_emb")).as("qcos"))
-      .groupBy(col("q_id"))
-      .agg(first(col("q_emb")).as("q_emb"),
-        graft.functions.TopKByScore.topK(col("qcos"), col("c_id"), Probe).as("top"))
-      .select(col("q_id"), col("q_emb"), explode(col("top.id")).as("cell"))
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long, Long, Double)]
     def serve(stage: Int, probes: DataFrame): Unit = {
       val back = spark.read.parquet(store)
         .select(col("vec_id"), col("emb"), col("cell").cast("long").as("cell"))
-      val scored = back.join(broadcast(probes), "cell")
-        .select(col("q_id"), col("vec_id"), cosine6(col("emb"), col("q_emb")).as("cos"))
-        .distinct()
-      val census = back
-        .agg(count(lit(1)).as("n_rows"), countDistinct(col("vec_id")).as("n_vecs"))
-      topKRanked(scored, "q_id", "cos", "vec_id", K)
-        .crossJoin(broadcast(census)).collect().foreach(r =>
+      servedTopK(back, probes, count(lit(1)).as("n_rows"), countDistinct(col("vec_id")).as("n_vecs"))
+        .foreach(r =>
           out += ((stage.toLong, r.getAs[Long]("n_rows"), r.getAs[Long]("n_vecs"),
             r.getAs[Long]("q_id"), r.getAs[Number]("rank").longValue,
             r.getAs[Long]("vec_id"), r.getAs[Double]("cos"))))
@@ -3470,7 +3456,7 @@ object VectorQueries {
 
     // E0 + S0: the base store under the live model
     landStore(store, cellsOf(base, cent0).select(col("vec_id"), col("emb"), col("cell")))
-    val probes0 = graft.CacheRegistry.track(probesOf(cent0).persist())
+    val probes0 = graft.CacheRegistry.track(probeCells(queries, cent0).persist())
     serve(0, probes0)
     // E1/E2 + S1/S2: nightly appends, served the batch they land
     append(a1, cent0); serve(1, probes0)
@@ -3490,7 +3476,7 @@ object VectorQueries {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val gainCells = moverRows.map(_._2).distinct.sorted
     val lossCells = moverRows.map(_._1).distinct.sorted
-    val probes1 = graft.CacheRegistry.track(probesOf(cent1).persist())
+    val probes1 = graft.CacheRegistry.track(probeCells(queries, cent1).persist())
     if (gainCells.nonEmpty) {
       byCell(j.filter(col("cell0").isin(gainCells.map(Long.box): _*))
           .select(col("vec_id"), col("emb"), col("cell0").as("cell"))
@@ -3733,8 +3719,7 @@ object VectorQueries {
     val codeCols = (0 until PquM).map(m => s"code_$m")
 
     // the serving store: full residual codes under the live model
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_resreb_${dirKey(dir)}").toString
+    val store = graft.GenStore.open(spark, "knn_res_rebalance").toString
     landStore(store, codes0)
 
     // the stale set: new cell repaired, or assignment changed
@@ -3867,8 +3852,7 @@ object VectorQueries {
       encodeCellsRes(cur.join(j.filter(isStale).select(col("vec_id")), "vec_id"),
         st.model1, PquM, d).persist())
 
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_ressrv_${dirKey(dir)}").toString
+    val store = graft.GenStore.open(spark, "knn_res_serve_repair").toString
     val vcols = col("vec_id") +: col("cell") +: codeCols.map(col) :+ col("model_v")
     landStore(store, codes0.withColumn("model_v", lit(0)).select(vcols: _*))
 
@@ -3883,14 +3867,8 @@ object VectorQueries {
           round(graft.functions.VectorOps.dot(subCol(col("q_emb"), m, PquM, d), col("c_emb")) + lit(1e-9), 6)
             .as(s"part_$m"))
     }
-    def probesOf(cent: DataFrame): DataFrame = queries.join(broadcast(cent))
-      .select(col("q_id"), col("q_emb"), col("c_id"), cosine6(col("q_emb"), col("c_emb")).as("qcos"))
-      .groupBy(col("q_id"))
-      .agg(first(col("q_emb")).as("q_emb"),
-        graft.functions.TopKByScore.topK(col("qcos"), col("c_id"), Probe).as("top"))
-      .select(col("q_id"), col("q_emb"), explode(col("top.id")).as("cell"))
-    val probes0 = graft.CacheRegistry.track(probesOf(cent0df).persist())
-    val probes1 = graft.CacheRegistry.track(probesOf(cent1df).persist())
+    val probes0 = graft.CacheRegistry.track(probeCells(queries, cent0df).persist())
+    val probes1 = graft.CacheRegistry.track(probeCells(queries, cent1df).persist())
 
     /** Version-paired per-(q, vec) max-ADC frame over the store's files;
       * `torn` pairs every row with v0 instead (the stale-reader decode). */
@@ -4597,8 +4575,7 @@ object VectorQueries {
       encodeCellsRes(cur.join(j.filter(isStale).select(col("vec_id")), "vec_id"),
         model1, PquM, d).persist())
 
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_rescal_${dirKey(dir)}").toString
+    val store = graft.GenStore.open(spark, "knn_res_calendar").toString
     val codeCols = (0 until PquM).map(m => s"code_$m")
     val vcols = col("vec_id") +: col("cell") +: codeCols.map(col) :+ col("model_v")
     def v0rows(pred: Column): DataFrame =
@@ -4614,14 +4591,8 @@ object VectorQueries {
           round(graft.functions.VectorOps.dot(subCol(col("q_emb"), m, PquM, d), col("c_emb")) + lit(1e-9), 6)
             .as(s"part_$m"))
     }
-    def probesOf(cent: DataFrame): DataFrame = queries.join(broadcast(cent))
-      .select(col("q_id"), col("q_emb"), col("c_id"), cosine6(col("q_emb"), col("c_emb")).as("qcos"))
-      .groupBy(col("q_id"))
-      .agg(first(col("q_emb")).as("q_emb"),
-        graft.functions.TopKByScore.topK(col("qcos"), col("c_id"), Probe).as("top"))
-      .select(col("q_id"), col("q_emb"), explode(col("top.id")).as("cell"))
-    val probes0 = graft.CacheRegistry.track(probesOf(cent0df).persist())
-    val probes1 = graft.CacheRegistry.track(probesOf(cent1df).persist())
+    val probes0 = graft.CacheRegistry.track(probeCells(queries, cent0df).persist())
+    val probes1 = graft.CacheRegistry.track(probeCells(queries, cent1df).persist())
 
     /** Version-paired per-(q, vec) max-ADC over the store's files;
       * `torn = true` forces every row through the v0 decode — the
@@ -4971,42 +4942,25 @@ object VectorQueries {
     val delPred = col("vec_id") % DelMod === DelRes && col("vec_id") % CalMod =!= 1L
     val assigned = graft.CacheRegistry.track(
       cellsOf(base, cent).select(col("vec_id"), col("emb"), col("cell")).persist())
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_storedel_${dirKey(dir)}").toString
+    val store = graft.GenStore.open(spark, "knn_store_delete").toString
     landStore(store, assigned)
-    val probes = graft.CacheRegistry.track(queries.join(broadcast(cent))
-      .select(col("q_id"), col("q_emb"), col("c_id"), cosine6(col("q_emb"), col("c_emb")).as("qcos"))
-      .groupBy(col("q_id"))
-      .agg(first(col("q_emb")).as("q_emb"),
-        graft.functions.TopKByScore.topK(col("qcos"), col("c_id"), Probe).as("top"))
-      .select(col("q_id"), col("q_emb"), explode(col("top.id")).as("cell"))
-      .persist())
+    val probes = graft.CacheRegistry.track(probeCells(queries, cent).persist())
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long, Long, Double)]
     val delByCell = scala.collection.mutable.Map.empty[Int, Map[Long, Long]]
     def serve(stage: Int): Unit = {
-      // ONE store scan per serve (r16, guide §6): the serve's probe join,
-      // the census aggregate and the per-cell deletion meter each
-      // re-scanned the store's partitioned small files — persist the
-      // read-back so the files are listed and read once per serve, and
-      // UNPERSIST before returning: the store mutates between serves, and
-      // a live cache entry would be plan-matched into the next serve's
-      // identical read as a stale file listing. Values unchanged.
+      // ONE store scan per serve (r16, guide §6): the probe join, the
+      // census and the per-cell deletion meter share the read-back
       val back = spark.read.parquet(store)
-        .select(col("vec_id"), col("emb"), col("cell").cast("long").as("cell")).persist()
-      try {
-        val scored = back.join(broadcast(probes), "cell")
-          .select(col("q_id"), col("vec_id"), cosine6(col("emb"), col("q_emb")).as("cos"))
-          .distinct()
-        val census = back.agg(count(lit(1)).as("n_rows"),
-          sum(when(delPred, 1L).otherwise(0L)).as("n_del_visible"))
-        topKRanked(scored, "q_id", "cos", "vec_id", K)
-          .crossJoin(broadcast(census)).collect().foreach(r =>
+        .select(col("vec_id"), col("emb"), col("cell").cast("long").as("cell"))
+      withPersisted(back) {
+        servedTopK(back, probes, count(lit(1)).as("n_rows"),
+          sum(when(delPred, 1L).otherwise(0L)).as("n_del_visible")).foreach(r =>
             out += ((stage.toLong, r.getAs[Long]("n_rows"), r.getAs[Long]("n_del_visible"),
               r.getAs[Long]("q_id"), r.getAs[Number]("rank").longValue,
               r.getAs[Long]("vec_id"), r.getAs[Double]("cos"))))
         delByCell(stage) = back.filter(delPred).groupBy(col("cell")).count()
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      } finally back.unpersist()
+      }
     }
     serve(0)
     // the manifest's touched cells, split into the two rewrite waves
@@ -5159,42 +5113,21 @@ object VectorQueries {
     val assigned = graft.CacheRegistry.track(
       cellsOf(corpus, cent).select(col("vec_id"), col("emb"), col("cell"))
         .withColumn("gen", genOf).persist())
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_storeret_${dirKey(dir)}")
-    graft.Fs.rmTree(store)
+    val store = graft.GenStore.open(spark, "knn_store_retention")
     // gen-then-cell layout: the age-out is rmTree(gen=g), nothing else
     assigned.repartition(col("gen"), col("cell"))
       .write.partitionBy("gen", "cell").mode("overwrite").parquet(store.toString)
-    val probes = graft.CacheRegistry.track(queries.join(broadcast(cent))
-      .select(col("q_id"), col("q_emb"), col("c_id"), cosine6(col("q_emb"), col("c_emb")).as("qcos"))
-      .groupBy(col("q_id"))
-      .agg(first(col("q_emb")).as("q_emb"),
-        graft.functions.TopKByScore.topK(col("qcos"), col("c_id"), Probe).as("top"))
-      .select(col("q_id"), col("q_emb"), explode(col("top.id")).as("cell"))
-      .persist())
+    val probes = graft.CacheRegistry.track(probeCells(queries, cent).persist())
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long, Long, Double)]
     val topk = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
     val gensAfter = scala.collection.mutable.Map.empty[Int, Seq[String]]
     val probeMatched = scala.collection.mutable.Map.empty[Int, Long]
     var full: Set[(Long, Long)] = Set.empty
-    def gensOnDisk(): Seq[String] = {
-      val s = java.nio.file.Files.list(store)
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
-        .filter(java.nio.file.Files.isDirectory(_)).map(_.getFileName.toString).toSeq.sorted
-      finally s.close()
-    }
     def serve(win: Int): Unit = {
-      // ONE store scan per serve, unpersisted before returning (r16,
-      // guide §6) — see knnStoreDelete's serve for the rationale and the
-      // stale-cache hazard; values unchanged.
-      val back = spark.read.parquet(store.toString)
-        .select(col("vec_id"), col("emb"), col("cell").cast("long").as("cell")).persist()
-      try {
-        val scored = back.join(broadcast(probes), "cell")
-          .select(col("q_id"), col("vec_id"), cosine6(col("emb"), col("q_emb")).as("cos"))
-          .distinct()
-        val served = topKRanked(scored, "q_id", "cos", "vec_id", K)
-          .crossJoin(broadcast(back.agg(count(lit(1)).as("n_rows")))).collect()
+      // ONE store scan per serve (r16, guide §6)
+      val back = store.readBack(col("vec_id"), col("emb"), col("cell").cast("long").as("cell"))
+      withPersisted(back) {
+        val served = servedTopK(back, probes, count(lit(1)).as("n_rows"))
         val pairs = served.map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"))).toSet
         if (win == 3) full = pairs
         val nKept = pairs.count(full.contains).toLong
@@ -5203,17 +5136,17 @@ object VectorQueries {
             r.getAs[Long]("q_id"), r.getAs[Number]("rank").longValue,
             r.getAs[Long]("vec_id"), r.getAs[Double]("cos"))))
         topk(win) = pairs
-        gensAfter(win) = gensOnDisk()
+        gensAfter(win) = store.generations()
         // the serve's OWN join, not the pre-serve probe frame: distinct
         // lookup keys that found ≥1 row in this window's store — the
         // scan-side work retention actually saves (r14 advice)
         probeMatched(win) = back.join(broadcast(probes.select(col("q_id"), col("cell"))), "cell")
           .select(col("q_id"), col("cell")).distinct().count()
-      } finally back.unpersist()
+      }
     }
     serve(3)
-    graft.Fs.rmTree(store.resolve("gen=0")); serve(2)
-    graft.Fs.rmTree(store.resolve("gen=1")); serve(1)
+    store.drop(0); serve(2)
+    store.drop(1); serve(1)
     import spark.implicits._
     val df = out.toSeq
       .toDF("win", "n_rows", "n_kept", "q_id", "rank", "vec_id", "cos")
@@ -5276,57 +5209,30 @@ object VectorQueries {
       cellsOf(base, cent).select(col("vec_id"), col("emb"), col("cell")).persist())
     val arrA = graft.CacheRegistry.track(
       cellsOf(arrivals, cent).select(col("vec_id"), col("emb"), col("cell")).persist())
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_storebf_${dirKey(dir)}").toString
+    val gs = graft.GenStore.open(spark, "knn_store_backfill"); val store = gs.toString
     landStore(store, baseA)
     def append(a: DataFrame): Unit =
       byCell(a).write.partitionBy("cell").mode("append").parquet(store)
     append(arrA)
-    val probes = graft.CacheRegistry.track(queries.join(broadcast(cent))
-      .select(col("q_id"), col("q_emb"), col("c_id"), cosine6(col("q_emb"), col("c_emb")).as("qcos"))
-      .groupBy(col("q_id"))
-      .agg(first(col("q_emb")).as("q_emb"),
-        graft.functions.TopKByScore.topK(col("qcos"), col("c_id"), Probe).as("top"))
-      .select(col("q_id"), col("q_emb"), explode(col("top.id")).as("cell"))
-      .persist())
+    val probes = graft.CacheRegistry.track(probeCells(queries, cent).persist())
     val touched = arrA.select(col("cell")).distinct().collect().map(_.getLong(0)).toSet
-    def filesByCell(): Map[Long, Int] = {
-      val root = java.nio.file.Paths.get(store)
-      val s = java.nio.file.Files.list(root)
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
-        .filter(p => java.nio.file.Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith("cell="))
-        .map { p =>
-          val c = p.getFileName.toString.stripPrefix("cell=").toLong
-          val l = java.nio.file.Files.list(p)
-          val n = try l.filter(f => f.getFileName.toString.endsWith(".parquet")).count().toInt
-          finally l.close()
-          c -> n
-        }.toMap
-      finally s.close()
-    }
+    def filesByCell(): Map[Long, Int] =
+      gs.filesByGen().map { case (d, n) => d.stripPrefix("cell=").toLong -> n }
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long, Long, Double)]
     val topk = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
     def serve(stage: Int): Unit = {
-      // ONE store scan per serve, unpersisted before returning (r16,
-      // guide §6) — see knnStoreDelete's serve for the rationale and the
-      // stale-cache hazard; values unchanged.
+      // ONE store scan per serve (r16, guide §6)
       val back = spark.read.parquet(store)
-        .select(col("vec_id"), col("emb"), col("cell").cast("long").as("cell")).persist()
-      try {
-        val scored = back.join(broadcast(probes), "cell")
-          .select(col("q_id"), col("vec_id"), cosine6(col("emb"), col("q_emb")).as("cos"))
-          .distinct()
-        val census = back.agg(count(lit(1)).as("n_rows"),
-          countDistinct(col("vec_id")).as("n_distinct"))
-        val served = topKRanked(scored, "q_id", "cos", "vec_id", K)
-          .crossJoin(broadcast(census)).collect()
+        .select(col("vec_id"), col("emb"), col("cell").cast("long").as("cell"))
+      withPersisted(back) {
+        val served = servedTopK(back, probes,
+          count(lit(1)).as("n_rows"), countDistinct(col("vec_id")).as("n_distinct"))
         served.foreach(r =>
           out += ((stage.toLong, r.getAs[Long]("n_rows"), r.getAs[Long]("n_distinct"),
             r.getAs[Long]("q_id"), r.getAs[Number]("rank").longValue,
             r.getAs[Long]("vec_id"), r.getAs[Double]("cos"))))
         topk(stage) = served.map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"))).toSet
-      } finally back.unpersist()
+      }
     }
     serve(0)
     // the retry storm: the night lands AGAIN into the same cell dirs
@@ -5456,8 +5362,7 @@ object VectorQueries {
       cellsOf(base, cent).select(col("vec_id"), col("emb"), col("cell")).persist())
     val arrA = graft.CacheRegistry.track(
       cellsOf(arrivals, cent).select(col("vec_id"), col("emb"), col("cell")).persist())
-    val store = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stores", s"graft_storecmp_${dirKey(dir)}").toString
+    val gs = graft.GenStore.open(spark, "knn_store_compact"); val store = gs.toString
     landStore(store, baseA)
     // the small-files storm: the night lands as 3 micro-batch-shaped
     // appends — each touched cell accumulates one file per append
@@ -5465,63 +5370,35 @@ object VectorQueries {
       byCell(arrA.filter(expr(s"(vec_id DIV $CalMod) % 3") === slice))
         .write.partitionBy("cell").mode("append").parquet(store)
     }
-    val probes = graft.CacheRegistry.track(queries.join(broadcast(cent))
-      .select(col("q_id"), col("q_emb"), col("c_id"), cosine6(col("q_emb"), col("c_emb")).as("qcos"))
-      .groupBy(col("q_id"))
-      .agg(first(col("q_emb")).as("q_emb"),
-        graft.functions.TopKByScore.topK(col("qcos"), col("c_id"), Probe).as("top"))
-      .select(col("q_id"), col("q_emb"), explode(col("top.id")).as("cell"))
-      .persist())
+    val probes = graft.CacheRegistry.track(probeCells(queries, cent).persist())
     val touched = arrA.select(col("cell")).distinct().collect().map(_.getLong(0)).toSet
-    def cellFiles(c: Long): Seq[java.nio.file.Path] = {
-      val d = java.nio.file.Paths.get(store, s"cell=$c")
-      if (!java.nio.file.Files.isDirectory(d)) return Seq.empty
-      val l = java.nio.file.Files.list(d)
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(l.iterator()).asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toVector
-      finally l.close()
-    }
-    def allCells(): Seq[Long] = {
-      val s = java.nio.file.Files.list(java.nio.file.Paths.get(store))
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
-        .filter(p => java.nio.file.Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith("cell="))
-        .map(_.getFileName.toString.stripPrefix("cell=").toLong).toVector
-      finally s.close()
-    }
-    def filesByCell(): Map[Long, Int] = allCells().map(c => c -> cellFiles(c).size).toMap
+    def filesByCell(): Map[Long, Int] =
+      gs.filesByGen().map { case (d, n) => d.stripPrefix("cell=").toLong -> n }
     def untouchedEvidence(): Set[(String, Long)] =
-      allCells().filterNot(touched).flatMap(c => cellFiles(c).map(p =>
-        (s"cell=$c/${p.getFileName}", java.nio.file.Files.size(p)))).toSet
+      gs.generations().filterNot(d => touched(d.stripPrefix("cell=").toLong)).flatMap(d =>
+        gs.fileEvidence(d).map { case (n, size) => (s"$d/$n", size) }).toSet
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long, Long, Double)]
     val topk = scala.collection.mutable.Map.empty[Int, Set[(Long, Long)]]
     val filesAt = scala.collection.mutable.Map.empty[Int, Map[Long, Int]]
     def serve(stage: Int): Unit = {
-      // ONE store scan per serve, unpersisted before returning (r16,
-      // guide §6) — see knnStoreDelete's serve for the rationale and the
-      // stale-cache hazard; values unchanged.
+      // ONE store scan per serve (r16, guide §6)
       val back = spark.read.parquet(store)
-        .select(col("vec_id"), col("emb"), col("cell").cast("long").as("cell")).persist()
-      try {
-        val scored = back.join(broadcast(probes), "cell")
-          .select(col("q_id"), col("vec_id"), cosine6(col("emb"), col("q_emb")).as("cos"))
-          .distinct()
-        val census = back.agg(count(lit(1)).as("n_rows"),
-          countDistinct(col("vec_id")).as("n_distinct"))
-        val served = topKRanked(scored, "q_id", "cos", "vec_id", K)
-          .crossJoin(broadcast(census)).collect()
+        .select(col("vec_id"), col("emb"), col("cell").cast("long").as("cell"))
+      withPersisted(back) {
+        val served = servedTopK(back, probes,
+          count(lit(1)).as("n_rows"), countDistinct(col("vec_id")).as("n_distinct"))
         served.foreach(r =>
           out += ((stage.toLong, r.getAs[Long]("n_rows"), r.getAs[Long]("n_distinct"),
             r.getAs[Long]("q_id"), r.getAs[Number]("rank").longValue,
             r.getAs[Long]("vec_id"), r.getAs[Double]("cos"))))
         topk(stage) = served.map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"))).toSet
         filesAt(stage) = filesByCell()
-      } finally back.unpersist()
+      }
     }
     serve(0)
     val untouchedBefore = untouchedEvidence()
     // snapshot the doomed files BEFORE the consolidated append lands
-    val oldFiles = touched.toSeq.flatMap(cellFiles)
+    val oldFiles = touched.toSeq.flatMap(c => gs.files(s"cell=$c"))
     // WRITE-then-delete: the consolidated per-cell files land while the
     // old ones still serve — content from the CACHED frames
     val consolidated = baseA.filter(col("cell").isin(touched.toSeq.map(Long.box): _*))

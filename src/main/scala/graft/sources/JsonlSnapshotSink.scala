@@ -345,43 +345,8 @@ object JsonlSnapshotSink {
     * pairs from the kv model + the window chunk formulation. */
   def snapshotQuery(spark: SparkSession, dir: String): DataFrame = {
     val records = graft.queries.ExportQueries.pipelineRecords(spark, dir)
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_snapshot_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    registerScratchRoot(spark, root)
+    val root = graft.GenStore.open(spark, "jsonl_snapshot").toString
     write(records, root) // eager — the objects exist when this returns
     readBack(spark, root).orderBy(col("object_key"), col("record"))
-  }
-
-  /** Scratch roots written by [[snapshotQuery]], deleted when the owning
-    * Spark application ends. The listener is installed once per
-    * SparkContext (tracked by applicationId, NOT once per JVM — a later
-    * session after the first application ends gets its own), and the
-    * registered roots are cleared once deleted so a subsequent application
-    * starts from a clean slate. */
-  private val scratchRoots = scala.collection.mutable.HashSet.empty[String]
-  private val listenerApps = scala.collection.mutable.HashSet.empty[String]
-  /** Shared with [[TrainShardSink]] — same lifecycle for its scratch. */
-  private[sources] def registerScratchRoot(spark: SparkSession, root: String): Unit = synchronized {
-    val ctx = spark.sparkContext
-    val appId = ctx.applicationId
-    if (listenerApps.add(appId)) {
-      ctx.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          JsonlSnapshotSink.synchronized {
-            scratchRoots.foreach { r =>
-              try {
-                def rm(f: java.io.File): Unit = {
-                  if (f.isDirectory) f.listFiles().foreach(rm)
-                  f.delete(); ()
-                }
-                rm(new java.io.File(r))
-              } catch { case scala.util.control.NonFatal(_) => () }
-            }
-            scratchRoots.clear()
-            listenerApps.remove(appId)
-            ()
-          }
-      })
-    }
-    scratchRoots += root
   }
 }

@@ -85,8 +85,7 @@ object ShardCompact {
         Window.partitionBy($"shard").orderBy($"first_gen", $"hk", $"bin", $"seq_id")).cast("long"))
       .select($"shard", $"pos", $"bin", $"seq_id", $"first_gen")
       .persist())
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_shardcpt_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    graft.Fs.rmTree(java.nio.file.Paths.get(root))
+    val root = graft.GenStore.open(spark, "shard_compact").toString
     def lineOf(f: DataFrame): DataFrame = f.select($"shard", $"pos",
       concat_ws("|", $"shard", $"pos", $"bin", $"seq_id", $"n_tokens", $"docs").as("line"))
     def nameG(g: Int) = (s: Int, of: Int) => f"shard-$s%04d-of-$of%04d.g$g.txt.gz"
@@ -165,12 +164,11 @@ object ShardCompact {
     val finalView = graft.CacheRegistry.track(
       graft.streaming.StreamShard.readBackGenN(spark, root)
         .select($"shard", $"pos", $"bin", $"seq_id", $"n_tokens", $"docs").persist())
-    finalView.count() // materialize before the scratch root is removed
+    finalView.count()
     val df = finalView.crossJoin(broadcast(bills))
       .select($"stage", $"shard", $"pos", $"bin", $"seq_id", $"n_tokens", $"docs",
         $"n_raw_lines", $"n_files", $"n_dead_lines", $"n_forgot_raw")
       .orderBy($"stage", $"shard", $"pos")
-    graft.Fs.rmTree(java.nio.file.Paths.get(root))
     (df, CompactShardDetail(files.toMap, forgotRaw.toMap))
   }
 

@@ -102,8 +102,7 @@ object ShardForget {
         Window.partitionBy($"shard").orderBy($"hk", $"bin", $"seq_id")).cast("long"))
       .select($"shard", $"pos", $"bin", $"seq_id", $"n_tokens", $"docs")
       .persist())
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_shardfgt_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    JsonlSnapshotSink.registerScratchRoot(spark, root)
+    val root = graft.GenStore.open(spark, "shard_forget").toString
     TrainShardSink.write(lines.select($"shard", $"pos",
       concat_ws("|", $"shard", $"pos", $"bin", $"seq_id", $"n_tokens", $"docs").as("line")),
       root, Shards)

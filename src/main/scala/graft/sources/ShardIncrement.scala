@@ -94,8 +94,7 @@ object ShardIncrement {
         Window.partitionBy($"shard").orderBy($"hk", $"bin", $"seq_id")).cast("long"))
       .select($"shard", $"pos", $"bin", $"seq_id", $"n_tokens", $"docs")
       .persist())
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_shardinc_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    JsonlSnapshotSink.registerScratchRoot(spark, root)
+    val root = graft.GenStore.open(spark, "shard_increment").toString
     def lineOf(f: DataFrame): DataFrame = f.select($"shard", $"pos",
       concat_ws("|", $"shard", $"pos", $"bin", $"seq_id", $"n_tokens", $"docs").as("line"))
     TrainShardSink.write(lineOf(l0), root, Shards)

@@ -163,7 +163,11 @@ object TrainShardSink {
     * and return the parsed read-back — the driver's oracle reconstructs
     * the same rows relationally, so a lost/reordered/corrupted line
     * anywhere in the write path fails the hash. */
-  def shardQuery(spark: SparkSession, dir: String): DataFrame = {
+  def shardQuery(spark: SparkSession, dir: String): DataFrame = shardQueryDetail(spark, dir)._1
+
+  /** [[shardQuery]] plus the store root it wrote (the spec inspects the
+    * shard files' physical order). */
+  private[graft] def shardQueryDetail(spark: SparkSession, dir: String): (DataFrame, String) = {
     val shuffled = PipelineQueries.sequenceShuffle(spark, dir)
     val manifest = PipelineQueries.sequenceManifest(spark, dir)
       .select(col("bin"), col("seq_id"), col("docs"))
@@ -171,9 +175,8 @@ object TrainShardSink {
       .select(col("shard"), col("pos"),
         concat_ws("|", col("shard"), col("pos"), col("bin"), col("seq_id"),
           col("n_tokens"), col("docs")).as("line"))
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_shards_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    JsonlSnapshotSink.registerScratchRoot(spark, root)
+    val root = graft.GenStore.open(spark, "train_shards").toString
     write(lines, root)
-    readBack(spark, root).orderBy(col("shard"), col("pos"))
+    (readBack(spark, root).orderBy(col("shard"), col("pos")), root)
   }
 }

@@ -154,15 +154,11 @@ object StreamCompact {
           // SERVE: the files are the store; candidates dedup before
           // ranking, so the compaction overlap is invisible to the top-k.
           // ONE store scan per serve (r16, guide §6): the probe join and
-          // the census aggregate shared no materialization, so every
-          // micro-batch read the partitioned small files twice — persist
-          // the read-back, and UNPERSIST before the batch returns (the
-          // store mutates between batches; a live cache entry would be
-          // plan-matched into the next batch's identical read as a stale
-          // file listing — measured at sf0.01 as a frozen n_rows census).
+          // the census aggregate share the read-back, released before the
+          // batch returns.
           val back = spark.read.parquet(store)
-            .select(col("vec_id"), col("emb"), col("cell").cast("long").as("cell")).persist()
-          try {
+            .select(col("vec_id"), col("emb"), col("cell").cast("long").as("cell"))
+          graft.GenStore.withPersisted(back) {
             val scored = back.join(broadcast(probes), "cell")
               .select(col("q_id"), col("vec_id"),
                 graft.functions.VectorOps.cosine6(col("emb"), col("q_emb")).as("cos"))
@@ -177,8 +173,7 @@ object StreamCompact {
                 r.getAs[Long]("vec_id"), r.getAs[Double]("cos"))))
             topk(id) = served.map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"))).toSet
             filesAt(id) = touched.map(c => c -> cellFiles(c).size).toMap
-          } finally back.unpersist()
-          ()
+          }
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .option("checkpointLocation", scratch.resolve("ckpt").toString)

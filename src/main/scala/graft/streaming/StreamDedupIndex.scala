@@ -39,22 +39,14 @@ object StreamDedupIndex {
 
   private[graft] def streamDedupIndexWithCensus(
       spark: SparkSession, dir: String): (DataFrame, IndexCensus) = {
-    import graft.queries.{HashDedup, TextQueries}
-    val tok = graft.CacheRegistry.track(TextQueries.dupCorpusTok(spark, dir).persist())
-    val sh5 = TextQueries.shingleFrameOf(tok)
-    val truthAll = graft.CacheRegistry.track(
-      TextQueries.dedupNgramJaccardFrom(tok).select(col("doc_a"), col("doc_b")).persist())
-    val m = HashDedup.IncCalMod.toLong
-    def clsOf(c: org.apache.spark.sql.Column) = pmod(c, lit(m))
-    val rows = graft.CacheRegistry.track(
-      HashDedup.mpBaseRows(HashDedup.mpSigFrom(tok))
-        .withColumn("cls", clsOf(col("doc_id"))).persist())
-    def ofCls(p: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame =
-      rows.filter(p(col("cls"))).select(col("doc_id"), col("band"), col("band_key"))
+    import graft.queries.{BandIndex, HashDedup}
+    import BandIndex.{clsOf, ratio}
+    val fx = new BandIndex(spark, dir)
+    import fx.{ofCls, tok}
     def truthNight(n: Int): DataFrame = {
       def indexed(c: org.apache.spark.sql.Column) =
         !clsOf(c).isin((n to 3).map(i => Long.box(i.toLong)): _*)
-      truthAll.filter(
+      fx.truthAll.filter(
         (clsOf(col("doc_a")) === n && indexed(col("doc_b"))) ||
           (clsOf(col("doc_b")) === n && indexed(col("doc_a"))))
     }
@@ -92,30 +84,21 @@ object StreamDedupIndex {
           val night = id + 1
           val keys = HashDedup.mpBaseRows(HashDedup.mpSigFrom(bdf))
             .select(col("doc_id"), col("band"), col("band_key"))
-            .persist()
-          keys.count() // materialize before the store is touched
-          val back = spark.read.parquet(store.toString)
-          val cand = keys.as("a").join(back.as("b"),
-              col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-                col("a.doc_id") =!= col("b.doc_id"))
-            .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-              greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b")).distinct()
-          val verified = TextQueries.verifyPairsOf(sh5, cand).select(col("doc_a"), col("doc_b"))
-          val tn = truthNight(night.toInt)
-          val r = cand.agg(count(lit(1)).as("n_candidates"))
-            .crossJoin(broadcast(back.agg(count(lit(1)).as("n_index_rows"))))
-            .crossJoin(broadcast(keys.agg(count(lit(1)).as("n_lookups"))))
-            .crossJoin(broadcast(tn.agg(count(lit(1)).as("n_true"))))
-            .crossJoin(broadcast(verified.join(broadcast(tn), Seq("doc_a", "doc_b"))
-              .agg(count(lit(1)).as("n_hit"))))
-            .collect()(0)
-          servedFiles += ((night, storeFiles()))
-          out += ((night, r.getAs[Long]("n_index_rows"), r.getAs[Long]("n_lookups"),
-            r.getAs[Long]("n_candidates"), r.getAs[Long]("n_true"), r.getAs[Long]("n_hit")))
-          // probe BEFORE append: the night never sees itself
-          keys.coalesce(1).write.mode("append").parquet(store.toString)
-          keys.unpersist()
-          ()
+          graft.GenStore.withPersisted(keys) {
+            keys.count() // materialize before the store is touched
+            val back = spark.read.parquet(store.toString)
+            val cand = BandIndex.probe(keys, back)
+            val tn = truthNight(night.toInt)
+            val r = BandIndex.census(cand, back, keys, tn, count(lit(1)).as("n_index_rows"))
+              .crossJoin(broadcast(fx.verified(cand).join(broadcast(tn), Seq("doc_a", "doc_b"))
+                .agg(count(lit(1)).as("n_hit"))))
+              .collect()(0)
+            servedFiles += ((night, storeFiles()))
+            out += ((night, r.getAs[Long]("n_index_rows"), r.getAs[Long]("n_lookups"),
+              r.getAs[Long]("n_candidates"), r.getAs[Long]("n_true"), r.getAs[Long]("n_hit")))
+            // probe BEFORE append: the night never sees itself
+            keys.coalesce(1).write.mode("append").parquet(store.toString)
+          }
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .option("checkpointLocation", scratch.resolve("ckpt").toString)
@@ -127,10 +110,8 @@ object StreamDedupIndex {
     import spark.implicits._
     val df = out.toSeq
       .toDF("night", "n_index_rows", "n_lookups", "n_candidates", "n_true", "n_hit")
-      .select(col("night"), col("n_index_rows"), col("n_lookups"),
-        col("n_candidates"), col("n_true"), col("n_hit"),
-        round(col("n_hit").cast("double") / greatest(col("n_candidates"), lit(1L)) + 1e-9, 6).as("prec"),
-        round(col("n_hit").cast("double") / greatest(col("n_true"), lit(1L)) + 1e-9, 6).as("rec"))
+      .withColumn("prec", ratio("n_hit", "n_candidates"))
+      .withColumn("rec", ratio("n_hit", "n_true"))
       .orderBy(col("night"))
     (df, IndexCensus(batches, servedFiles.toSeq))
   }

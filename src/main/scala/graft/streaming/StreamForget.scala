@@ -148,50 +148,46 @@ object StreamForget {
           }
           // SERVE: the files are the store — №184's discipline.
           // ONE store scan per serve (r16, guide §6): the fused census
-          // below and the serve's probe join still each scanned the
-          // store's partitioned files — persist the read-back so both
-          // ride one scan, and UNPERSIST before the batch returns (the
-          // store mutates between batches; a live cache entry would be
-          // plan-matched into the next batch's identical read as a stale
-          // file listing).
+          // below and the serve's probe join share the read-back,
+          // released before the batch returns.
           val back = spark.read.parquet(store)
-            .select(col("vec_id"), col("emb"), col("cell").cast("long").as("cell")).persist()
-          // Census in ONE store scan (r15 verdict item 7 — stream_night's
-          // 58cb504 single-scan serve pattern, guide §6 "do fewer passes"):
-          // the serve's n_rows/n_del_visible aggregate, the per-leg
-          // del-visibility split, and the applied-manifest resurrection
-          // check previously each re-scanned the store files (three
-          // aggregation passes per micro-batch on top of the serve's probe
-          // join). The applied-manifest set is batch-bounded, so it rides
-          // the census aggregation as a broadcast left join — sum(ap) over
-          // the same pass that counts n_rows equals the former left-semi
-          // count (ids are distinct, each store row matches ≤1). All five
-          // census numbers are DISTRIBUTIVE (r14 verdict 1) and splice
-          // into the result rows driver-side — the returned frame's values
-          // are unchanged.
-          val applied = forgotten.toSeq.reduceOption(_ unionAll _)
-            .map(_.select(col("vec_id")).distinct().withColumn("ap", lit(1L)))
-          val backC = applied.map(m => back.join(broadcast(m), Seq("vec_id"), "left"))
-            .getOrElse(back.withColumn("ap", lit(0L)))
-          val census = backC.agg(
-            count(lit(1)).as("n_rows"),
-            sum(when(delFull, 1L).otherwise(0L)).as("n_del_visible"),
-            sum(when(delFull && col("vec_id") % 20 =!= 0, 1L).otherwise(0L)).as("del_base"),
-            sum(when(delFull && col("vec_id") % 20 === 0, 1L).otherwise(0L)).as("del_a1"),
-            sum(coalesce(col("ap"), lit(0L))).as("applied_vis")).collect()(0)
-          val nRows = census.getAs[Long]("n_rows")
-          val nDelVis = census.getAs[Long]("n_del_visible")
-          val served = VectorQueries.ivfSearch(back, cent, queries, Probe, K).collect()
-          results ++= served.map(r =>
-            (id, nRows, nDelVis,
-              r.getAs[Long]("q_id"), r.getAs[Number]("rank").longValue,
-              r.getAs[Long]("vec_id"), r.getAs[Double]("cos")))
-          topk(id) = served.map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"))).toSet
-          appliedVisible(id) = census.getAs[Long]("applied_vis")
-          delBaseVisible(id) = census.getAs[Long]("del_base")
-          delA1Visible(id) = census.getAs[Long]("del_a1")
-          back.unpersist()
-          ()
+            .select(col("vec_id"), col("emb"), col("cell").cast("long").as("cell"))
+          graft.GenStore.withPersisted(back) {
+            // Census in ONE store scan (r15 verdict item 7 — stream_night's
+            // 58cb504 single-scan serve pattern, guide §6 "do fewer passes"):
+            // the serve's n_rows/n_del_visible aggregate, the per-leg
+            // del-visibility split, and the applied-manifest resurrection
+            // check previously each re-scanned the store files (three
+            // aggregation passes per micro-batch on top of the serve's probe
+            // join). The applied-manifest set is batch-bounded, so it rides
+            // the census aggregation as a broadcast left join — sum(ap) over
+            // the same pass that counts n_rows equals the former left-semi
+            // count (ids are distinct, each store row matches ≤1). All five
+            // census numbers are DISTRIBUTIVE (r14 verdict 1) and splice
+            // into the result rows driver-side — the returned frame's values
+            // are unchanged.
+            val applied = forgotten.toSeq.reduceOption(_ unionAll _)
+              .map(_.select(col("vec_id")).distinct().withColumn("ap", lit(1L)))
+            val backC = applied.map(m => back.join(broadcast(m), Seq("vec_id"), "left"))
+              .getOrElse(back.withColumn("ap", lit(0L)))
+            val census = backC.agg(
+              count(lit(1)).as("n_rows"),
+              sum(when(delFull, 1L).otherwise(0L)).as("n_del_visible"),
+              sum(when(delFull && col("vec_id") % 20 =!= 0, 1L).otherwise(0L)).as("del_base"),
+              sum(when(delFull && col("vec_id") % 20 === 0, 1L).otherwise(0L)).as("del_a1"),
+              sum(coalesce(col("ap"), lit(0L))).as("applied_vis")).collect()(0)
+            val nRows = census.getAs[Long]("n_rows")
+            val nDelVis = census.getAs[Long]("n_del_visible")
+            val served = VectorQueries.ivfSearch(back, cent, queries, Probe, K).collect()
+            results ++= served.map(r =>
+              (id, nRows, nDelVis,
+                r.getAs[Long]("q_id"), r.getAs[Number]("rank").longValue,
+                r.getAs[Long]("vec_id"), r.getAs[Double]("cos")))
+            topk(id) = served.map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"))).toSet
+            appliedVisible(id) = census.getAs[Long]("applied_vis")
+            delBaseVisible(id) = census.getAs[Long]("del_base")
+            delA1Visible(id) = census.getAs[Long]("del_a1")
+          }
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .option("checkpointLocation", scratch.resolve("ckpt").toString)

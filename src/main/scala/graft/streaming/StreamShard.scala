@@ -91,8 +91,7 @@ object StreamShard {
       .withColumn("hk", md5(concat($"bin".cast("string"), lit(":"), $"seq_id".cast("string"))))
       .withColumn("shard",
         pmod(conv(substring($"hk", 1, 8), 16, 10).cast("long"), lit(SH)).cast("int"))
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_streamshard_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    graft.Fs.rmTree(java.nio.file.Paths.get(root)) // replay's andThen removes it again
+    val root = graft.GenStore.open(spark, "stream_shard").toString
     def lineOf(f: DataFrame): DataFrame = f.select($"shard", $"pos",
       concat_ws("|", $"shard", $"pos", $"bin", $"seq_id", $"n_tokens", $"docs").as("line"))
     // gen 0: base pack, plain №68 names
@@ -115,9 +114,7 @@ object StreamShard {
     // grown per batch from the batch's own new keys
     var keysSoFar: DataFrame = graft.CacheRegistry.track(l0.persist())
     var batches = -1
-    ReplayHarness.replay(spark, 8, name, andThen = () => {
-      graft.Fs.rmTree(scratch); graft.Fs.rmTree(java.nio.file.Paths.get(root))
-    }) { register =>
+    ReplayHarness.replay(spark, 8, name, andThen = () => graft.Fs.rmTree(scratch)) { register =>
       ReplayHarness.landBands(scratch, inDir, Seq(
         off.filter($"batch" === 1).select($"doc_id", lit(0L).as("kind")).coalesce(1),
         off.filter($"batch" === 2).select($"doc_id", lit(0L).as("kind")).coalesce(1),

@@ -8,12 +8,12 @@ import org.apache.spark.sql.functions._
 class TrainShardSinkSpec extends SparkSpec {
 
   test("shard files hold the full corpus in consumption order") {
-    val out = TrainShardSink.shardQuery(spark, sf).collect()
+    val (df, root) = TrainShardSink.shardQueryDetail(spark, sf)
+    val out = df.collect()
     val packed = PipelineQueries.sequencePack(spark, sf).count()
     assert(out.length == packed, "one shard line per packed sequence")
     // the sink's physical guarantee: within each shard FILE the lines are
     // stored in pos order (a loader streams the file sequentially)
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_shards_${sf.replaceAll("[^a-zA-Z0-9]", "_")}"
     val files = new java.io.File(s"$root/shards").listFiles().filter(_.getName.endsWith(".gz"))
     assert(files.nonEmpty && files.length <= PipelineQueries.NShards)
     files.foreach { f =>
